@@ -267,9 +267,7 @@ CRAWL_BUDGET = 32
 
 
 def run_crawl(
-    spark, n_pages: int, max_waves: int, use_bloom: bool = False,
-    bloom_distribute: str = "broadcast", politeness_impl: str = "window",
-    seen_filter: str = "bloom",
+    spark, n_pages: int, max_waves: int, seen_filter: str | None = None,
 ) -> tuple[float, int]:
     """Frontier throughput: budgeted waves over a spark.range-generated
     webgraph, starting from a pre-loaded large frontier (measuring the
@@ -288,10 +286,7 @@ def run_crawl(
             max_depth=4,
             max_waves=max_waves,
             salt_buckets=16,
-            use_bloom=use_bloom,
             seen_filter=seen_filter,
-            bloom_distribute=bloom_distribute,
-            politeness_impl=politeness_impl,
         ),
     )
     # one-time table prep (co-partitioned robots-filtered edge cache —
@@ -930,11 +925,9 @@ def scaling(pair: tuple[int, int] = (2, 8), trials: int | None = None) -> None:
 
 
 SEEN_CONFIGS = [
-    ("bloom_off", dict(use_bloom=False)),
-    ("bloom_on", dict(use_bloom=True, seen_filter="bloom", bloom_distribute="broadcast")),
-    ("bloom_on_copart", dict(use_bloom=True, seen_filter="bloom", bloom_distribute="copartition")),
-    ("cuckoo_on", dict(use_bloom=True, seen_filter="cuckoo", bloom_distribute="broadcast")),
-    ("cuckoo_on_copart", dict(use_bloom=True, seen_filter="cuckoo", bloom_distribute="copartition")),
+    ("bloom_off", dict(seen_filter=None)),
+    ("bloom_on", dict(seen_filter="bloom")),
+    ("cuckoo_on", dict(seen_filter="cuckoo")),
 ]
 
 
@@ -970,7 +963,7 @@ def seen_child(label: str) -> None:
 
 
 def seen_ab_gated(max_attempts: int = 4) -> None:
-    """The URL-seen five-way A/B with the scaling harness's rigor: one
+    """The URL-seen three-way A/B with the scaling harness's rigor: one
     fresh-JVM child per config, pre-gated on 1-min load AND accepted
     only when in-run external interference stays under
     EXT_CONTENTION_CORES (a start-of-run loadavg gate cannot see
@@ -1026,27 +1019,16 @@ def hygiene() -> None:
 
 
 def bloom_ab() -> None:
-    """A/B the URL-seen bloom prefilter on the headline crawl: same
-    world, bloom off vs on-broadcast vs on-copartition (all three paths
-    are bit-exact — the bloom only changes the anti-join's probe size;
-    copartition is the one-blob-per-task distribution for filters too
-    big to broadcast)."""
+    """A/B the URL-seen prefilter on the headline crawl: same world,
+    filter off vs bloom vs cuckoo (all three are bit-exact — the filter
+    only changes the anti-join's probe size)."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from news_please_spark.session import get_spark
 
     spark = get_spark("bloom_ab", cpus=CPUS, shuffle_partitions=CPUS)
     out = {}
-    for label, flag, filt, dist in (
-        ("bloom_off", False, "bloom", "broadcast"),
-        ("bloom_on", True, "bloom", "broadcast"),
-        ("bloom_on_copart", True, "bloom", "copartition"),
-        ("cuckoo_on", True, "cuckoo", "broadcast"),
-        ("cuckoo_on_copart", True, "cuckoo", "copartition"),
-    ):
-        sec, urls = run_crawl(
-            spark, CRAWL_PAGES, CRAWL_WAVES, use_bloom=flag,
-            seen_filter=filt, bloom_distribute=dist,
-        )
+    for label, kwargs in SEEN_CONFIGS:
+        sec, urls = run_crawl(spark, CRAWL_PAGES, CRAWL_WAVES, **kwargs)
         out[label] = {"sec": round(sec, 2), "urls": urls,
                       "urls_per_sec": round(urls / sec, 1)}
         print(json.dumps({label: out[label]}), flush=True)
@@ -1109,26 +1091,6 @@ def cc_pipeline() -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def politeness_ab() -> None:
-    """A/B the two politeness implementations on the headline crawl:
-    'window' (salted two-phase row_number) vs 'threshold' (k-th-smallest
-    aggregate + explicitly-broadcast threshold join — the no-sort path
-    for extreme per-host skew). Both are bit-exact vs the oracle."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from news_please_spark.session import get_spark
-
-    spark = get_spark("politeness_ab", cpus=CPUS, shuffle_partitions=CPUS)
-    out = {}
-    for impl in ("window", "threshold"):
-        sec, urls = run_crawl(
-            spark, CRAWL_PAGES, CRAWL_WAVES, politeness_impl=impl
-        )
-        out[impl] = {"sec": round(sec, 2), "urls": urls,
-                     "urls_per_sec": round(urls / sec, 1)}
-        print(json.dumps({impl: out[impl]}), flush=True)
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--scaling-child":
         scaling_child(int(sys.argv[2]))
@@ -1140,8 +1102,6 @@ if __name__ == "__main__":
         seen_ab_gated()
     elif len(sys.argv) > 1 and sys.argv[1] == "--bloom-ab":
         bloom_ab()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--politeness-ab":
-        politeness_ab()
     elif len(sys.argv) > 1 and sys.argv[1] == "--cc":
         cc_pipeline()
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":

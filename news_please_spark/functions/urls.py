@@ -29,6 +29,14 @@ def url_path(url: Column) -> Column:
     return F.when(p == "", F.lit("/")).otherwise(p)
 
 
+def url_bucket(url: str | Column, n_buckets: int) -> Column:
+    """Hash bucket 0..n_buckets-1 of a URL: pmod(xxhash64(url), B). The
+    one layout key of every URL-keyed table — the seen snapshots, the
+    URL-seen filter blobs and the versioned article store — so tables
+    bucketed by it stay co-partitioned with each other."""
+    return F.pmod(F.xxhash64(url), F.lit(n_buckets))
+
+
 def canonical_host(url: Column) -> Column:
     """www.-stripped lowercase host (reference url_extractor.py:39-51)."""
     return F.regexp_replace(F.lower(url_host(url)), r"^www\.", "")

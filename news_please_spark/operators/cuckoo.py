@@ -2,13 +2,10 @@
 bloom/cuckoo URL-seen filter"; reference analogue: scrapy RFPDupeFilter
 persisted per crawler JOBDIR, reference newsplease/single_crawler.py:170-187).
 
-Same partitioning architecture as the bloom variant (operators/urlseen.py):
-the seen table hash-buckets by pmod(xxhash64(url), B); per bucket an
-independent filter blob is built with `applyInPandas`; probes go either
-through one task broadcast of all blobs or a bucket-cogrouped probe where
-each task holds exactly one blob. Candidates the filter rejects are
-definitely unseen; accepts go through the exact left_anti confirm, so
-false positives can never drop URLs.
+The per-bucket numpy kernels (build, merge, contains) plugged into the
+frame shared with the bloom variant (operators/seenfilter.py), which
+owns bucketing, hash lanes, the cogrouped probe and the exact anti-join
+confirm — false positives can never drop URLs.
 
 What cuckoo buys over bloom (Fan et al. 2014, "Cuckoo Filter:
 Practically Better Than Bloom"):
@@ -30,35 +27,24 @@ is an involution — from ANY current slot the other candidate bucket is
 recomputable, which is what makes eviction and fingerprint-level delta
 merging possible without the original keys.
 
-Hashing discipline (same as bloom): both 64-bit lanes come from the
-JVM's codegen'd xxhash64; Python only does numpy array work. The build
-is vectorized two-pass greedy (rank-within-bucket placement at i1, then
-i2) and only the residual tail — a few % at the default 0.8 load —
-walks the classic eviction loop per item, bounded at MAX_KICKS.
+The build is vectorized two-pass greedy (rank-within-bucket placement
+at i1, then i2) and only the residual tail — a few % at the default 0.8
+load — walks the classic eviction loop per item, bounded at MAX_KICKS.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from news_please_spark.operators import seenfilter
 
 SLOTS = 4           # fingerprints per cuckoo bucket (Fan et al. sweet spot)
 LOAD = 0.8          # target table load; two-pass greedy leaves a small tail
 MAX_KICKS = 500     # eviction walk bound (standard)
 _FP_MULT = np.uint64(0x5BD1E995)  # fingerprint splash for the alt index
-
-
-def _lane_cols(url: str | Column = "url") -> tuple[Column, Column]:
-    """Two independent JVM-side 64-bit hash lanes (identical to the
-    bloom's lanes so either filter can be swapped in per config)."""
-    return F.xxhash64(url), F.xxhash64(url, F.lit(0x9E3779B9))
-
-
-def _as_u64(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.int64).view(np.uint64)
 
 
 def _geometry(n_items: int) -> int:
@@ -155,6 +141,46 @@ _BLOB_SCHEMA = T.StructType(
 )
 
 
+def _tables(pdf: pd.DataFrame) -> tuple[int, list[np.ndarray]]:
+    """(b, read-only (b, SLOTS) table views) of one bucket's blob rows."""
+    if pdf["b"].nunique() != 1 or pdf["s"].nunique() != 1:
+        raise ValueError(
+            f"cuckoo blobs in bucket {pdf['bucket'].iloc[0]} have mixed "
+            "geometry — build deltas with the same fixed capacity"
+        )
+    bb = int(pdf["b"].iloc[0])
+    return bb, [
+        np.frombuffer(blob, dtype=np.uint16).reshape(bb, SLOTS)
+        for blob in pdf["blob"]
+    ]
+
+
+def _merge(pdf: pd.DataFrame) -> dict:
+    """The smaller tables' occupied fingerprints re-insert into the
+    fullest one. Partial-key indexing makes this possible WITHOUT the
+    original URLs — a stored (slot index, fp) pair regenerates its
+    alternate bucket as index XOR h(fp)."""
+    bb, tables = _tables(pdf)
+    tables.sort(key=lambda t: np.count_nonzero(t), reverse=True)
+    acc = tables[0].copy()
+    for t in tables[1:]:
+        idx, slot = np.nonzero(t)
+        fp = t[idx, slot]
+        _insert_all(acc, fp, idx, _alt_index(idx, fp, bb))
+    return {"b": bb, "s": SLOTS, "blob": acc.tobytes()}
+
+
+def _contains(pdf: pd.DataFrame, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    bb, tables = _tables(pdf)
+    fp, i1, i2 = _fp_i1_i2(h1, h2, bb)
+    hit = np.zeros(len(h1), dtype=bool)
+    for table in tables:  # unmerged deltas: a hit in any table counts
+        hit |= (table[i1] == fp[:, None]).any(axis=1) | (
+            table[i2] == fp[:, None]
+        ).any(axis=1)
+    return hit
+
+
 def build_cuckoo_blobs(
     seen: DataFrame, n_buckets: int, capacity: int | None = None
 ) -> DataFrame:
@@ -165,61 +191,18 @@ def build_cuckoo_blobs(
     the bloom's fixed (m, k))."""
     fixed_b = _geometry(capacity) if capacity else None
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["bucket", "b", "s", "blob"])
-        b = fixed_b if fixed_b else _geometry(len(pdf))
+    def build(h1: np.ndarray, h2: np.ndarray) -> dict:
+        b = fixed_b if fixed_b else _geometry(len(h1))
         table = np.zeros((b, SLOTS), dtype=np.uint16)
-        fp, i1, i2 = _fp_i1_i2(_as_u64(pdf["h1"]), _as_u64(pdf["h2"]), b)
-        _insert_all(table, fp, i1, i2)
-        return pd.DataFrame(
-            [{"bucket": int(pdf["bucket"].iloc[0]), "b": b, "s": SLOTS,
-              "blob": table.tobytes()}]
-        )
+        _insert_all(table, *_fp_i1_i2(h1, h2, b))
+        return {"b": b, "s": SLOTS, "blob": table.tobytes()}
 
-    h1, h2 = _lane_cols("url")
-    bucketed = seen.select(
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        h1.alias("h1"),
-        h2.alias("h2"),
-    )
-    return bucketed.groupBy("bucket").applyInPandas(build, _BLOB_SCHEMA)
+    return seenfilter.build_blobs(seen, n_buckets, build, _BLOB_SCHEMA)
 
 
 def merge_cuckoo_blobs(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge per-bucket cuckoo tables of identical geometry: the
-    smaller operand's occupied fingerprints re-insert into the larger's
-    table. Partial-key indexing makes this possible WITHOUT the
-    original URLs — a stored (slot index, fp) pair regenerates its
-    alternate bucket as index XOR h(fp). One tiny applyInPandas over
-    ≤ n_buckets groups, like the bloom's OR-merge."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["bucket", "b", "s", "blob"])
-        bs = pdf["b"].unique()
-        if len(bs) != 1 or pdf["s"].nunique() != 1:
-            raise ValueError(
-                f"cuckoo blobs in bucket {pdf['bucket'].iloc[0]} have mixed "
-                "geometry — build deltas with the same fixed capacity"
-            )
-        bb = int(bs[0])
-        tables = [
-            np.frombuffer(blob, dtype=np.uint16).reshape(bb, SLOTS).copy()
-            for blob in pdf["blob"]
-        ]
-        tables.sort(key=lambda t: np.count_nonzero(t), reverse=True)
-        acc = tables[0]
-        for t in tables[1:]:
-            idx, slot = np.nonzero(t)
-            fp = t[idx, slot]
-            _insert_all(acc, fp, idx, _alt_index(idx, fp, bb))
-        return pd.DataFrame(
-            [{"bucket": int(pdf["bucket"].iloc[0]), "b": bb, "s": SLOTS,
-              "blob": acc.tobytes()}]
-        )
-
-    return a.unionByName(b).groupBy("bucket").applyInPandas(merge, _BLOB_SCHEMA)
+    """Merge per-bucket cuckoo tables of identical geometry (checked)."""
+    return seenfilter.merge_blobs(a, b, _merge, _BLOB_SCHEMA)
 
 
 def delete_from_cuckoo_blobs(
@@ -230,30 +213,21 @@ def delete_from_cuckoo_blobs(
     can't offer). URLs whose fingerprint is absent are ignored: the
     caller deletes what it previously inserted. Cogrouped on bucket so
     each task edits exactly one blob."""
-    h1, h2 = _lane_cols("url")
-    keyed = urls.select(
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        h1.alias("h1"),
-        h2.alias("h2"),
-    )
+    keyed = seenfilter.keyed(urls, n_buckets).select("bucket", "h1", "h2")
 
     def drop(blob_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
         if blob_pdf.empty:
-            return pd.DataFrame(columns=["bucket", "b", "s", "blob"])
+            return pd.DataFrame(columns=_BLOB_SCHEMA.names)
         if len(blob_pdf) > 1:
             raise ValueError(
                 f"bucket {int(blob_pdf['bucket'].iloc[0])} has "
                 f"{len(blob_pdf)} blobs — merge deltas before deleting"
             )
-        bb = int(blob_pdf["b"].iloc[0])
-        table = (
-            np.frombuffer(blob_pdf["blob"].iloc[0], dtype=np.uint16)
-            .reshape(bb, SLOTS)
-            .copy()
-        )
+        bb, (table,) = _tables(blob_pdf)
+        table = table.copy()
         if not del_pdf.empty:
             fp, i1, i2 = _fp_i1_i2(
-                _as_u64(del_pdf["h1"]), _as_u64(del_pdf["h2"]), bb
+                seenfilter.as_u64(del_pdf["h1"]), seenfilter.as_u64(del_pdf["h2"]), bb
             )
             for j in range(len(fp)):  # delete batches are small by contract
                 for cand in (int(i1[j]), int(i2[j])):
@@ -273,120 +247,19 @@ def delete_from_cuckoo_blobs(
     )
 
 
-def _contains(table: np.ndarray, fp: np.ndarray, i1: np.ndarray, i2: np.ndarray) -> np.ndarray:
-    return ((table[i1] == fp[:, None]).any(axis=1)) | (
-        (table[i2] == fp[:, None]).any(axis=1)
-    )
-
-
-def _probe_broadcast(candidates: DataFrame, blobs: DataFrame, materialize: bool) -> DataFrame:
-    """Verdict via one task broadcast of all blobs (see the bloom
-    docstring for why a broadcast VARIABLE, not a broadcast join)."""
-    blob_map = {
-        int(r["bucket"]): (int(r["b"]), bytes(r["blob"]))
-        for r in blobs.collect()
-    }
-    bc = candidates.sparkSession.sparkContext.broadcast(blob_map)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(
-        bucket: pd.Series, h1s: pd.Series, h2s: pd.Series
-    ) -> pd.Series:
-        bm = bc.value
-        out = np.zeros(len(bucket), dtype=bool)
-        if len(bucket) == 0:
-            return pd.Series(out)
-        h1a, h2a = _as_u64(h1s), _as_u64(h2s)
-        barr = bucket.to_numpy()
-        for bkt in np.unique(barr):
-            entry = bm.get(int(bkt))
-            if entry is None:
-                continue
-            sel = barr == bkt
-            bb, blob = entry
-            table = np.frombuffer(blob, dtype=np.uint16).reshape(bb, SLOTS)
-            fp, i1, i2 = _fp_i1_i2(h1a[sel], h2a[sel], bb)
-            out[sel] = _contains(table, fp, i1, i2)
-        return pd.Series(out)
-
-    probed = candidates.withColumn(
-        "_maybe", might_contain(F.col("bucket"), F.col("h1"), F.col("h2"))
-    ).drop("h1", "h2")
-    if materialize:
-        probed = probed.localCheckpoint(eager=True)
-        bc.destroy()
-    return probed
-
-
-def _probe_copartition(candidates: DataFrame, blobs: DataFrame, materialize: bool) -> DataFrame:
-    """Verdict via cogroup on bucket — one blob per task, nothing
-    collected to the driver (the 10^10 design point, identical shape to
-    the bloom's copartition probe)."""
-    out_schema = T.StructType(
-        [f for f in candidates.schema.fields if f.name not in ("h1", "h2")]
-        + [T.StructField("_maybe", T.BooleanType(), False)]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=out_cols)
-        out = cand.drop(columns=["h1", "h2"])
-        if blob.empty:
-            out["_maybe"] = False
-            return out
-        if blob["b"].nunique() != 1:
-            raise ValueError(
-                f"cuckoo blobs in bucket {int(cand['bucket'].iloc[0])} have "
-                "mixed geometry — merge deltas with the same fixed capacity"
-            )
-        bb = int(blob["b"].iloc[0])
-        h1a, h2a = _as_u64(cand["h1"]), _as_u64(cand["h2"])
-        fp, i1, i2 = _fp_i1_i2(h1a, h2a, bb)
-        hit = np.zeros(len(cand), dtype=bool)
-        for bl in blob["blob"]:  # tolerate unmerged deltas
-            table = np.frombuffer(bl, dtype=np.uint16).reshape(bb, SLOTS)
-            hit |= _contains(table, fp, i1, i2)
-        out["_maybe"] = hit
-        return out
-
-    probed = (
-        candidates.groupBy("bucket")
-        .cogroup(blobs.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
-    if materialize:
-        probed = probed.localCheckpoint(eager=True)
-    return probed
-
-
 def cuckoo_prefilter(
     candidates: DataFrame,
     seen: DataFrame,
     n_buckets: int,
     blobs: DataFrame | None = None,
     materialize: bool = True,
-    distribute: str = "broadcast",
 ) -> DataFrame:
     """Split candidates by cuckoo verdict; return
     definitely-new ∪ (maybe-seen exact-anti-join seen). Drop-in for
-    bloom_prefilter — same signature, same exactness contract (the
-    filter only shrinks the anti-join's probe side)."""
-    if distribute not in ("broadcast", "copartition"):
-        raise ValueError(f"unknown cuckoo distribute strategy: {distribute!r}")
+    bloom_prefilter — same call contract, same exactness (the filter
+    only shrinks the anti-join's probe side)."""
     if blobs is None:
         blobs = build_cuckoo_blobs(seen, n_buckets)
-    cand_cols = candidates.columns
-
-    h1, h2 = _lane_cols("url")
-    keyed = candidates.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).withColumn("h1", h1).withColumn("h2", h2)
-    if distribute == "copartition":
-        probed = _probe_copartition(keyed, blobs, materialize)
-    else:
-        probed = _probe_broadcast(keyed, blobs, materialize)
-    definitely_new = probed.filter(~F.col("_maybe")).select(*cand_cols)
-    maybe = probed.filter(F.col("_maybe")).select(*cand_cols)
-    confirmed_new = maybe.join(seen, "url", "left_anti")
-    return definitely_new.unionByName(confirmed_new)
+    return seenfilter.prefilter(
+        candidates, seen, n_buckets, blobs, _contains, materialize
+    )

@@ -13,14 +13,15 @@ Per wave:
                 when small), native filters F2/F3/F4, robots gate F11
                 (broadcast prefix-array join), min-disc_key dedup of
                 in-wave duplicates
-  URL-seen    — optional partitioned-bloom prefilter + exact left_anti
-                confirm against the `seen` table (D1)
+  URL-seen    — optional partitioned bloom/cuckoo prefilter (bucket-
+                cogrouped probe) + exact left_anti confirm against the
+                `seen` table (D1)
   checkpoint  — frontier/seen/order/metrics parquet snapshots per wave
                 (resume = read the last complete wave)
 
 Scale notes (100 TB / 10^10 URLs):
   * `seen` and `frontier` would live in Iceberg, bucketed by
-    pmod(xxhash64(url), B) so the per-wave anti-join is co-partitioned;
+    url_bucket(url, B) so the per-wave anti-join is co-partitioned;
     local parquet snapshots keep the same layout (.repartition on the
     bucket expression before write).
   * lineage is cut every wave via the checkpoint write — no
@@ -38,13 +39,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from news_please_spark.functions.urls import url_host, url_path
+from news_please_spark.functions.urls import url_bucket, url_host, url_path
 from news_please_spark.operators.cacheutil import release_df
-from news_please_spark.operators.ordering import (
-    mark_top_k_by_threshold,
-    mark_top_k_per_key,
-    with_global_seq,
-)
+from news_please_spark.operators.ordering import mark_top_k_per_key, with_global_seq
 from news_please_spark.world import (
     ALLOWED_DOMAIN_SUFFIX,
     IGNORE_EXTENSIONS,
@@ -61,6 +58,8 @@ BROADCAST_SEEN_URL_BYTES = 32 << 20  # raw URL bytes; below this the URL-seen
 # the engine forces shuffle_hash, never trusting Catalyst's schema-default
 # estimate of a checkpointed leaf
 SMALL_SEQ_LIMIT = 500_000  # below this a single-partition window beats two-phase
+# (a one-task sort of 500k rows is ~0.3 s; the two-phase numbering costs
+# two extra jobs + a shuffle — only worth it for genuinely huge waves)
 SMALL_SEQ_BYTES = 64 << 20  # ... but only while the whole fetch set also fits
 # one task's sort buffer comfortably — fat rows (multi-KB URLs) must take the
 # two-phase path even at low row counts
@@ -87,14 +86,13 @@ def use_single_partition_seq(n_rows: int, est_bytes: int) -> bool:
 # DISC_STRIDE, so keys stay unique within any frontier as long as
 # n_seeds < DISC_STRIDE (asserted at seed numbering) and every page has
 # < DISC_STRIDE outlinks (enforced per row by a raise_error branch in
-# the expansion select). Uniqueness is the precondition of the exact
-# 'threshold' politeness path. 64-bit headroom: parent seq < 2^41
+# the expansion select). Uniqueness makes disc_key a total order within
+# every host, so politeness and the in-wave dedup never tie-break on
+# anything but the key the oracle uses. 64-bit headroom: parent seq < 2^41
 # (~2.2e12 fetched pages — unreachable before the multiply overflows).
 # 2^22 admits multi-million-URL seed lists (a 10^10-URL frontier is
 # seeded from CC-scale URL dumps, not a hand-curated file).
 DISC_STRIDE = 1 << 22
-# (a one-task sort of 500k rows is ~0.3 s; the two-phase numbering costs
-# two extra jobs + a shuffle — only worth it for genuinely huge waves)
 
 
 @dataclass
@@ -102,20 +100,16 @@ class FrontierConfig:
     budget_per_host: int = 4          # reference config.cfg:354
     max_depth: int = 4
     max_waves: int = 10_000
-    use_bloom: bool = False
-    # which approximate-membership filter backs the prefilter when
-    # use_bloom is on: "bloom" (OR-mergeable bit array, ~1.2 B/URL at
-    # 1% FPR) or "cuckoo" (deletable 16-bit fingerprints, ~3 B/URL at
+    # approximate-membership prefilter in front of the exact URL-seen
+    # anti-join: None (off), "bloom" (OR-mergeable bit array, ~1.2 B/URL
+    # at 1% FPR) or "cuckoo" (deletable 16-bit fingerprints, ~3 B/URL at
     # ~5e-4 FPR — the variant that can follow a store that RETRACTS
     # documents without a rebuild). Both share bucketing, hash lanes,
-    # probe strategies, and the exactness contract.
-    seen_filter: str = "bloom"
-    bloom_capacity: int = 1 << 17     # expected per-bucket rows; fixes (m, k)
-    # so per-wave blob deltas OR-merge — each wave hashes only its delta
-    # "broadcast": all blobs in one task broadcast (small filters);
-    # "copartition": cogroup probe, one blob per task — the 10^10-URL
-    # design point where total blob bytes exceed any single JVM
-    bloom_distribute: str = "broadcast"
+    # the probe and the exactness contract (operators/seenfilter.py).
+    seen_filter: str | None = None
+    bloom_capacity: int = 1 << 17     # expected per-bucket rows; fixes the
+    # filter geometry so per-wave blob deltas merge — each wave hashes
+    # only its delta
     salt_buckets: int = 1             # >1 enables skew-safe two-phase top-k
     state_dir: str | None = None      # enables checkpoint/resume
     # wave-history retention: keep only the newest N wave snapshots
@@ -127,30 +121,22 @@ class FrontierConfig:
     retain_waves: int | None = None
     seen_buckets: int = 32            # hash-bucket layout of the seen table
     checkpoint_every: int = 8         # waves between lineage truncations
-    # politeness marking: "window" = salted two-phase row_number (default;
-    # fastest when the per-wave frontier fits task memory after salting);
-    # "threshold" = aggregate k-th-smallest + join (no frontier-wide sort;
-    # exact because disc_key is unique — for extreme per-host skew where
-    # even salted sort groups blow past task memory). A/B at 600k pages:
-    # window ~5-6k URLs/s, threshold ~2-5k (the self-join shuffle costs
-    # more than the sort it avoids at this scale).
-    politeness_impl: str = "window"
-    # fold the global seq numbering INTO the politeness-mark checkpoint
-    # job when the wave's fetch set is predicted small enough for the
-    # one-task window (see the fused branch in _run_waves): saves one
-    # full driver job barrier + one checkpoint round-trip per wave —
-    # the wave-count-proportional control-plane floor that dominates
-    # small-wave runs at high parallelism. Predicted-large waves keep
-    # the separate two-phase numbering (the 10^10-URL path).
-    fuse_seq: bool = True
     verbose: bool = False
 
+    def __post_init__(self) -> None:
+        if self.seen_filter not in (None, "bloom", "cuckoo"):
+            raise ValueError(
+                f"seen_filter must be None, 'bloom' or 'cuckoo', not {self.seen_filter!r}"
+            )
+        if self.retain_waves is not None and self.retain_waves < 1:
+            raise ValueError(f"retain_waves must be None or >= 1, not {self.retain_waves}")
 
-def _seen_filter_fns(cfg: "FrontierConfig"):
-    """(build, merge, prefilter) for the configured approximate URL-seen
+
+def _seen_filter_fns(seen_filter: str):
+    """(build, merge, prefilter) of the named approximate URL-seen
     filter — bloom and cuckoo share one call contract, so the wave loop
     is filter-agnostic."""
-    if cfg.seen_filter == "cuckoo":
+    if seen_filter == "cuckoo":
         from news_please_spark.operators.cuckoo import (
             build_cuckoo_blobs,
             cuckoo_prefilter,
@@ -158,15 +144,13 @@ def _seen_filter_fns(cfg: "FrontierConfig"):
         )
 
         return build_cuckoo_blobs, merge_cuckoo_blobs, cuckoo_prefilter
-    if cfg.seen_filter == "bloom":
-        from news_please_spark.operators.urlseen import (
-            bloom_prefilter,
-            build_bloom_blobs,
-            merge_bloom_blobs,
-        )
+    from news_please_spark.operators.urlseen import (
+        bloom_prefilter,
+        build_bloom_blobs,
+        merge_bloom_blobs,
+    )
 
-        return build_bloom_blobs, merge_bloom_blobs, bloom_prefilter
-    raise ValueError(f"unknown seen_filter: {cfg.seen_filter!r}")
+    return build_bloom_blobs, merge_bloom_blobs, bloom_prefilter
 
 
 @dataclass
@@ -186,8 +170,6 @@ class CrawlResult:
         are unusable afterwards. Without this the result's state lives
         until driver GC — an accretion on long-lived sessions that run
         many crawls."""
-        from news_please_spark.operators.cacheutil import release_df
-
         for df in self._caches:
             release_df(df)
         self._caches.clear()
@@ -363,7 +345,7 @@ class FrontierEngine:
 
     def _save_wave(self, wave, frontier, seen, order_wave, meta) -> None:
         tx = self._wave_catalog().begin(expected=wave - 1)
-        bucket = F.pmod(F.xxhash64("url"), F.lit(self.cfg.seen_buckets))
+        bucket = url_bucket("url", self.cfg.seen_buckets)
         frontier.write.mode("overwrite").parquet(tx.path("frontier"))
         seen.repartition(self.cfg.seen_buckets, bucket).write.mode(
             "overwrite"
@@ -383,6 +365,8 @@ class FrontierEngine:
         fold and the expiry leaves a wave dir without its seen table —
         resume's per-wave existence check is on the seen SUBDIR, so
         nothing is double-counted or lost. Returns the expired ids."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, not {keep_last}")
         cat = self._wave_catalog()
         snaps = cat.snapshots()
         expired = snaps[:-keep_last] if len(snaps) > keep_last else []
@@ -521,12 +505,12 @@ class FrontierEngine:
             release_df(c)
         _seed_caches.clear()
 
-        # incremental bloom state: blobs are built once from the initial
-        # seen set with a FIXED (m, k), then OR-merged with each wave's
-        # delta — per-wave bloom cost is O(wave), never O(seen)
+        # incremental filter state: blobs are built once from the initial
+        # seen set with a FIXED geometry, then merged with each wave's
+        # delta — per-wave filter cost is O(wave), never O(seen)
         blob_state: DataFrame | None = None
-        if cfg.use_bloom:
-            build_blobs, _, _ = _seen_filter_fns(cfg)
+        if cfg.seen_filter:
+            build_blobs, _, _ = _seen_filter_fns(cfg.seen_filter)
             blob_state = build_blobs(
                 seen_chunks[0], cfg.seen_buckets, capacity=cfg.bloom_capacity
             ).localCheckpoint(eager=True)
@@ -536,8 +520,6 @@ class FrontierEngine:
             for c in seen_chunks[1:]:
                 s = s.unionByName(c)
             return s
-
-        import time as _time
 
         # AQE is valuable for ad-hoc queries, but inside the wave loop
         # every join is already routed by engine-held statistics
@@ -605,39 +587,25 @@ class FrontierEngine:
         fuse_bytes_pred = frontier_url_bytes
         while wave < cfg.max_waves:
             _t0 = _time.time()
-            fuse = (
-                cfg.fuse_seq
-                and use_single_partition_seq(
-                    fuse_rows_pred,
-                    estimated_fetch_bytes(fuse_rows_pred, fuse_bytes_pred),
-                )
-                and frontier_rows <= 16 * SMALL_SEQ_LIMIT
-            )
-            # politeness: each host fetches at most B URLs per wave (O2).
-            # disc_key is globally unique, so the threshold variant
-            # (aggregate + join, no frontier-wide sort) is exact.
+            fuse = use_single_partition_seq(
+                fuse_rows_pred,
+                estimated_fetch_bytes(fuse_rows_pred, fuse_bytes_pred),
+            ) and frontier_rows <= 16 * SMALL_SEQ_LIMIT
+            # politeness: each host fetches at most B URLs per wave (O2),
+            # marked by the salted two-phase window (salt_buckets > 1
+            # bounds any sort group of a skewed host).
             # One checkpoint per wave bounds the logical-plan depth —
             # otherwise Catalyst re-analyzes an exponentially growing
             # tree even though the data is cached.
-            if cfg.politeness_impl == "threshold":
-                marked = mark_top_k_by_threshold(
-                    frontier,
-                    key="host",
-                    order_col="disc_key",
-                    k=cfg.budget_per_host,
-                    salt_buckets=max(cfg.salt_buckets, 8),
-                    flag="_fetch",
-                )
-            else:
-                marked = mark_top_k_per_key(
-                    frontier,
-                    key="host",
-                    order_cols=["disc_key", "url"],
-                    k=cfg.budget_per_host,
-                    salt_buckets=cfg.salt_buckets,
-                    salt_on="url",
-                    flag="_fetch",
-                )
+            marked = mark_top_k_per_key(
+                frontier,
+                key="host",
+                order_cols=["disc_key", "url"],
+                k=cfg.budget_per_host,
+                salt_buckets=cfg.salt_buckets,
+                salt_on="url",
+                flag="_fetch",
+            )
             # fused seq: number the fetch rows INSIDE the mark job — a
             # one-task window over ONLY the _fetch branch (the deferred
             # branch bypasses it; the politeness shuffle is shared by
@@ -657,10 +625,7 @@ class FrontierEngine:
                 # shuffle, not the window stages) — measured SLOWER
                 # than the job it saves.
                 _wkey = F.when(F.col("_fetch"), F.lit(-1)).otherwise(
-                    F.pmod(
-                        F.xxhash64("url"),
-                        F.lit(spark.sparkContext.defaultParallelism * 4),
-                    )
+                    url_bucket("url", spark.sparkContext.defaultParallelism * 4)
                 )
                 wseq = Window.partitionBy(_wkey).orderBy(
                     "depth", "disc_key", "url"
@@ -774,12 +739,11 @@ class FrontierEngine:
                     # from the seed keys 0..n_seeds-1 (seeds deferred by
                     # politeness would otherwise collide with children of
                     # early parents), so disc_key is unique WITHIN EVERY
-                    # HOST — the precondition of the exact threshold
-                    # politeness path
+                    # HOST.
                     # the < DISC_STRIDE outlink precondition is enforced
                     # here, per row, inside codegen (a branch, not a
-                    # scan) — a page with ≥ 2^20 outlinks would silently
-                    # corrupt disc_key uniqueness otherwise
+                    # scan) — a page with ≥ DISC_STRIDE (2^22) outlinks
+                    # would silently corrupt disc_key uniqueness otherwise
                     F.when(
                         F.col("link_index") < DISC_STRIDE,
                         (F.col("p_seq") + 1) * DISC_STRIDE + F.col("link_index"),
@@ -816,15 +780,9 @@ class FrontierEngine:
             # URL-seen D1: optional bloom/cuckoo prefilter, exact
             # anti-join confirm
             seen = seen_df()
-            if cfg.use_bloom:
-                _, _, prefilter = _seen_filter_fns(cfg)
-                cand = prefilter(
-                    cand,
-                    seen,
-                    self.cfg.seen_buckets,
-                    blobs=blob_state,
-                    distribute=cfg.bloom_distribute,
-                )
+            if cfg.seen_filter:
+                _, _, prefilter = _seen_filter_fns(cfg.seen_filter)
+                cand = prefilter(cand, seen, cfg.seen_buckets, blobs=blob_state)
             # the seen side is a union of localCheckpointed chunks, and a
             # LogicalRDD leaf has NO usable size statistics — Catalyst
             # estimates it at schema-default width and would happily
@@ -891,8 +849,8 @@ class FrontierEngine:
                         release_df(c)
                     else:
                         retire_next.append(b)
-            if cfg.use_bloom:
-                build_blobs, merge_blobs, _ = _seen_filter_fns(cfg)
+            if cfg.seen_filter:
+                build_blobs, merge_blobs, _ = _seen_filter_fns(cfg.seen_filter)
                 delta = build_blobs(
                     new.select("url"), cfg.seen_buckets, capacity=cfg.bloom_capacity
                 )

@@ -52,18 +52,21 @@ def with_global_seq(
         "_pid", F.spark_partition_id()
     )
     d = d.persist()
-    if not materialize and caches is not None:
-        caches.append(d)
     counts = dict(
         d.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
     )
+    if not counts:
+        # nothing to number: an empty local relation needs no cache
+        d.unpersist()
+        schema = d.drop("_pid").withColumn(out, F.lit(0).cast("long")).schema
+        return spark.createDataFrame([], schema), offset
+    if not materialize and caches is not None:
+        caches.append(d)
     acc = offset
     cum: dict[int, int] = {}
     for pid in sorted(counts):
         cum[pid] = acc
         acc += counts[pid]
-    if not cum:
-        return d.withColumn(out, F.lit(0).cast("long")).drop("_pid"), offset
     mapping = F.create_map(
         *[F.lit(x) for kv in cum.items() for x in kv]
     )
@@ -76,55 +79,6 @@ def with_global_seq(
         res = res.localCheckpoint(eager=True)
         d.unpersist()
     return res, acc
-
-
-def mark_top_k_by_threshold(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    k: int,
-    salt_buckets: int = 16,
-    flag: str = "_topk",
-    broadcast_threshold: bool = True,
-) -> DataFrame:
-    """Skew-safe top-k marking WITHOUT sorting the input: requires
-    `order_col` values to be unique within each key (true for the
-    frontier's disc_key, which embeds a globally unique parent seq).
-
-    Two-level aggregation computes each key's k-th smallest order value
-    (map-side combinable; the salt bounds any single buffer at
-    ~|group|/salt_buckets), then one join marks rows ≤ threshold.
-    This replaces two full window sorts of the frontier with one tiny
-    aggregate + a broadcast threshold join — the difference between
-    O(frontier·log) per wave and O(frontier).
-
-    The threshold side is ≤ one fixed-width row per key, so it is
-    broadcast EXPLICITLY (default): the frontier engine runs this
-    inside its AQE-off wave loop, where Catalyst's static estimate of a
-    two-level aggregate is schema-default garbage and would otherwise
-    plan a sort-merge join that re-sorts the whole frontier — the exact
-    cost this variant exists to avoid. Pass broadcast_threshold=False
-    only when the key cardinality itself is broadcast-hostile (≳10^8
-    distinct keys); the join then shuffles both sides hash-partitioned
-    on `key`, still never sorting the full input.
-    """
-    salted = df.groupBy(
-        key, F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)).alias("_s")
-    ).agg(F.slice(F.array_sort(F.collect_list(order_col)), 1, k).alias("_top"))
-    thr = (
-        salted.groupBy(key)
-        .agg(F.array_sort(F.flatten(F.collect_list("_top"))).alias("_all"))
-        .select(
-            key,
-            F.element_at("_all", F.least(F.lit(k), F.size("_all"))).alias("_thr"),
-        )
-    )
-    thr = F.broadcast(thr) if broadcast_threshold else thr.hint("shuffle_hash")
-    return (
-        df.join(thr, key)
-        .withColumn(flag, F.col(order_col) <= F.col("_thr"))
-        .drop("_thr")
-    )
 
 
 def mark_top_k_per_key(

@@ -1,40 +1,10 @@
-"""Partitioned bloom-filter URL-seen prefilter (north_rule: "partitioned
-bloom/cuckoo URL-seen filter"; reference analogue: scrapy RFPDupeFilter
-persisted per crawler JOBDIR, reference newsplease/single_crawler.py:170-187).
+"""Partitioned bloom-filter URL-seen prefilter: the per-bucket numpy
+kernels (bit array, double hashing) plugged into the shared frame of
+operators/seenfilter.py, which owns bucketing, hash lanes, the
+cogrouped probe and the exact anti-join confirm.
 
-Design: the `seen` table is hash-bucketed by pmod(xxhash64(url), B).
-Per bucket we build an independent bloom blob with `applyInPandas`
-(numpy bit array, double hashing), so build parallelism == bucket count
-and each blob sizes to its bucket.
-
-Hashing discipline: BOTH 64-bit hash lanes are computed JVM-side with
-the codegen'd xxhash64 (two different seed columns) — no URL string
-ever crosses Arrow, and the Python side only does numpy bit-twiddling
-over int64 arrays (vectorized across the whole batch, zero per-row
-Python). Spark's internal BloomFilterAggregate/might_contain pair would
-be simpler still, but it is not registered in the public function
-registry as of Spark 4.1.2 (UNRESOLVED_ROUTINE), so this keeps the same
-JVM-hash + Arrow-batch shape explicitly.
-
-Probe path: candidates get the same bucket id, then one of two
-distribution strategies answers might_contain:
-
-- "broadcast" (default, small filters): the ≤ n_buckets blob rows are
-  collected and shipped once per executor as a task broadcast; a
-  vectorized pandas UDF probes them. Right up to a few GB of blobs.
-- "copartition" (the 10^10-URL design point): candidates and blobs are
-  cogrouped on `bucket` — each task receives ONE bucket's candidates
-  plus that bucket's single blob row and probes partition-locally.
-  Nothing is collected to the driver and no task ever holds more than
-  one blob, so total blob bytes can exceed any single JVM's memory
-  (~76k buckets × ~150 KB ≈ 11 GB at the design point). This is the
-  bucket-co-partitioned probe a cluster deployment would use, with the
-  blob table as an Iceberg table bucketed by `bucket`.
-
-Either way, candidates the bloom rejects are *definitely unseen* → skip
-the exact join entirely. Candidates the bloom accepts go through the
-exact left_anti confirm, so false positives can never drop URLs —
-exactness is preserved, the bloom only cuts the big-join input.
+Blobs built with a fixed capacity share (m, k), so per-wave deltas
+merge by bitwise OR — the incremental path the crawl loop uses.
 """
 
 from __future__ import annotations
@@ -43,19 +13,10 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-
-def _lane_cols(url: str | Column = "url") -> tuple[Column, Column]:
-    """Two independent JVM-side 64-bit hash lanes (xxhash64, distinct
-    seeds via an extra literal column)."""
-    return F.xxhash64(url), F.xxhash64(url, F.lit(0x9E3779B9))
-
-
-def _as_u64(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.int64).view(np.uint64)
+from news_please_spark.operators import seenfilter
 
 
 def _bloom_set(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -76,6 +37,40 @@ _BLOB_SCHEMA = T.StructType(
 )
 
 
+def _bit_index(h1: np.ndarray, h2: np.ndarray, j: int, m: int) -> tuple[np.ndarray, np.ndarray]:
+    """(byte, bit) of double-hash probe j for every lane pair."""
+    idx = (h1 + np.uint64(j) * h2) % np.uint64(m)
+    return (idx // 8).astype(np.int64), (idx % 8).astype(np.uint8)
+
+
+def _or_blobs(pdf: pd.DataFrame) -> tuple[int, int, np.ndarray]:
+    """(m, k, bits) of one bucket's blob rows OR-ed together."""
+    if pdf["m"].nunique() != 1 or pdf["k"].nunique() != 1:
+        raise ValueError(
+            f"bloom blobs in bucket {pdf['bucket'].iloc[0]} have mixed "
+            "(m, k) — build deltas with the same fixed capacity"
+        )
+    m, k = int(pdf["m"].iloc[0]), int(pdf["k"].iloc[0])
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    for blob in pdf["blob"]:
+        bits |= np.frombuffer(blob, dtype=np.uint8)
+    return m, k, bits
+
+
+def _merge(pdf: pd.DataFrame) -> dict:
+    m, k, bits = _or_blobs(pdf)
+    return {"m": m, "k": k, "blob": bits.tobytes()}
+
+
+def _contains(pdf: pd.DataFrame, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    m, k, bits = _or_blobs(pdf)
+    hit = np.ones(len(h1), dtype=bool)
+    for j in range(k):  # k ≤ 8 vectorized passes, no per-row work
+        byte, bit = _bit_index(h1, h2, j, m)
+        hit &= ((bits[byte] >> bit) & 1) == 1
+    return hit
+
+
 def build_bloom_blobs(
     seen: DataFrame, n_buckets: int, fpp: float = 0.01, capacity: int | None = None
 ) -> DataFrame:
@@ -90,164 +85,21 @@ def build_bloom_blobs(
     rate; the exact anti-join confirm keeps results bit-exact."""
     fixed = _bloom_set(capacity, fpp) if capacity else None
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["bucket", "m", "k", "blob"])
-        bucket = int(pdf["bucket"].iloc[0])
-        m, k = fixed if fixed else _bloom_set(len(pdf), fpp)
+    def build(h1: np.ndarray, h2: np.ndarray) -> dict:
+        m, k = fixed if fixed else _bloom_set(len(h1), fpp)
         bits = np.zeros(m // 8, dtype=np.uint8)
-        h1, h2 = _as_u64(pdf["h1"]), _as_u64(pdf["h2"])
-        for j in range(k):  # k ≤ 8 vectorized passes, no per-row work
-            idx = (h1 + np.uint64(j) * h2) % np.uint64(m)
-            np.bitwise_or.at(
-                bits, (idx // 8).astype(np.int64), (1 << (idx % 8)).astype(np.uint8)
-            )
-        return pd.DataFrame(
-            [{"bucket": bucket, "m": m, "k": k, "blob": bits.tobytes()}]
-        )
+        for j in range(k):
+            byte, bit = _bit_index(h1, h2, j, m)
+            np.bitwise_or.at(bits, byte, (1 << bit).astype(np.uint8))
+        return {"m": m, "k": k, "blob": bits.tobytes()}
 
-    h1, h2 = _lane_cols("url")
-    bucketed = seen.select(
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        h1.alias("h1"),
-        h2.alias("h2"),
-    )
-    return bucketed.groupBy("bucket").applyInPandas(build, _BLOB_SCHEMA)
+    return seenfilter.build_blobs(seen, n_buckets, build, _BLOB_SCHEMA)
 
 
 def merge_bloom_blobs(a: DataFrame, b: DataFrame) -> DataFrame:
     """Bitwise-OR per-bucket blobs built with the SAME fixed capacity
-    (m, k must match within a bucket; asserted). One tiny
-    applyInPandas over ≤ n_buckets groups."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["bucket", "m", "k", "blob"])
-        ms = pdf["m"].unique()
-        ks = pdf["k"].unique()
-        if len(ms) != 1 or len(ks) != 1:
-            raise ValueError(
-                f"bloom blobs in bucket {pdf['bucket'].iloc[0]} have mixed "
-                f"(m, k) — build deltas with the same fixed capacity"
-            )
-        acc = np.zeros(int(ms[0]) // 8, dtype=np.uint8)
-        for blob in pdf["blob"]:
-            acc |= np.frombuffer(blob, dtype=np.uint8)
-        return pd.DataFrame(
-            [{"bucket": int(pdf["bucket"].iloc[0]), "m": int(ms[0]),
-              "k": int(ks[0]), "blob": acc.tobytes()}]
-        )
-
-    return a.unionByName(b).groupBy("bucket").applyInPandas(merge, _BLOB_SCHEMA)
-
-
-def _probe_broadcast(candidates: DataFrame, blobs: DataFrame, materialize: bool) -> DataFrame:
-    """Verdict column via a task broadcast of ALL blobs.
-
-    A REAL broadcast variable, not a broadcast JOIN: a join would copy
-    each bucket's ~100 KB blob into every candidate row (the probe then
-    materializes GBs); as a task broadcast the blobs exist once per
-    executor. ≤ n_buckets rows collect to the driver — the classic
-    runtime-filter distribution path. Capped by driver/executor memory;
-    use distribute="copartition" past a few GB of blobs."""
-    blob_map = {
-        int(r["bucket"]): (int(r["m"]), int(r["k"]), bytes(r["blob"]))
-        for r in blobs.collect()
-    }
-    bc = candidates.sparkSession.sparkContext.broadcast(blob_map)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(
-        bucket: pd.Series, h1s: pd.Series, h2s: pd.Series
-    ) -> pd.Series:
-        bm = bc.value
-        out = np.zeros(len(bucket), dtype=bool)
-        if len(bucket) == 0:
-            return pd.Series(out)
-        h1a, h2a = _as_u64(h1s), _as_u64(h2s)
-        barr = bucket.to_numpy()
-        # one vectorized probe per distinct bucket in the batch (each
-        # bucket shares one blob) — no per-row Python
-        for b in np.unique(barr):
-            sel = barr == b
-            entry = bm.get(int(b))
-            if entry is None:
-                continue  # empty bucket: nothing seen there
-            m, k, blob = entry
-            bits = np.frombuffer(blob, dtype=np.uint8)
-            mm = np.uint64(m)
-            hit = np.ones(int(sel.sum()), dtype=bool)
-            g1, g2 = h1a[sel], h2a[sel]
-            for j in range(k):
-                idx = (g1 + np.uint64(j) * g2) % mm
-                hit &= (
-                    (bits[(idx // 8).astype(np.int64)] >> (idx % 8).astype(np.uint8)) & 1
-                ) == 1
-            out[sel] = hit
-        return pd.Series(out)
-
-    probed = candidates.withColumn(
-        "_maybe", might_contain(F.col("bucket"), F.col("h1"), F.col("h2"))
-    ).drop("h1", "h2")
-    if materialize:
-        probed = probed.localCheckpoint(eager=True)
-        # after the eager checkpoint nothing re-executes the UDF; free
-        # the per-wave blob broadcast instead of accreting one per wave
-        # on driver + executors over a long crawl
-        bc.destroy()
-    return probed
-
-
-def _probe_copartition(candidates: DataFrame, blobs: DataFrame, materialize: bool) -> DataFrame:
-    """Verdict column via cogroup on `bucket`: each task holds exactly
-    one bucket's blob while probing that bucket's candidates. Scales to
-    blob tables far larger than any single JVM (the 10^10-URL design
-    point); the price is one hash exchange of the candidate side, which
-    the broadcast path avoids — so it is the big-filter strategy, not
-    the default."""
-    out_schema = T.StructType(
-        [f for f in candidates.schema.fields if f.name not in ("h1", "h2")]
-        + [T.StructField("_maybe", T.BooleanType(), False)]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=out_cols)
-        out = cand.drop(columns=["h1", "h2"])
-        if blob.empty:
-            out["_maybe"] = False  # no blob → bucket never saw a URL
-            return out
-        if blob["m"].nunique() != 1 or blob["k"].nunique() != 1:
-            raise ValueError(
-                f"bloom blobs in bucket {int(cand['bucket'].iloc[0])} have "
-                "mixed (m, k) — merge deltas with the same fixed capacity"
-            )
-        m = int(blob["m"].iloc[0])
-        k = int(blob["k"].iloc[0])
-        # tolerate unmerged deltas: OR the bucket's blobs on the fly
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        for bl in blob["blob"]:
-            bits |= np.frombuffer(bl, dtype=np.uint8)
-        h1a, h2a = _as_u64(cand["h1"]), _as_u64(cand["h2"])
-        mm = np.uint64(m)
-        hit = np.ones(len(cand), dtype=bool)
-        for j in range(k):
-            idx = (h1a + np.uint64(j) * h2a) % mm
-            hit &= (
-                (bits[(idx // 8).astype(np.int64)] >> (idx % 8).astype(np.uint8)) & 1
-            ) == 1
-        out["_maybe"] = hit
-        return out
-
-    probed = (
-        candidates.groupBy("bucket")
-        .cogroup(blobs.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
-    if materialize:
-        probed = probed.localCheckpoint(eager=True)
-    return probed
+    (m, k must match within a bucket; checked)."""
+    return seenfilter.merge_blobs(a, b, _merge, _BLOB_SCHEMA)
 
 
 def bloom_prefilter(
@@ -257,43 +109,13 @@ def bloom_prefilter(
     fpp: float = 0.01,
     blobs: DataFrame | None = None,
     materialize: bool = True,
-    distribute: str = "broadcast",
 ) -> DataFrame:
     """Split candidates by bloom verdict; return
-    definitely-new ∪ (maybe-seen exact-anti-join seen).
-
-    Output preserves the candidate schema and exact semantics; the bloom
-    only shrinks the expensive anti-join's probe side. Pass prebuilt
-    `blobs` (incrementally merged across waves) to avoid rehashing the
-    whole seen set per call.
-
-    distribute: "broadcast" collects all blobs into one task broadcast
-    (fastest while total blob bytes fit comfortably in each JVM);
-    "copartition" cogroups candidates with blobs on `bucket` so each
-    task holds exactly one blob — the scale path for filters whose blob
-    table exceeds executor memory (see module docstring).
-
-    materialize=True localCheckpoints the probed candidates before the
-    split — the verdict column feeds THREE consumers (two filter
-    branches + the anti-join), and without a cut each one would
-    re-execute the whole upstream plan (for the crawl loop that is the
-    expansion join, 3×).
-    """
-    if distribute not in ("broadcast", "copartition"):
-        raise ValueError(f"unknown bloom distribute strategy: {distribute!r}")
+    definitely-new ∪ (maybe-seen exact-anti-join seen) — see
+    seenfilter.prefilter. Pass prebuilt `blobs` (incrementally merged
+    across waves) to avoid rehashing the whole seen set per call."""
     if blobs is None:
         blobs = build_bloom_blobs(seen, n_buckets, fpp)
-    cand_cols = candidates.columns
-
-    h1, h2 = _lane_cols("url")
-    keyed = candidates.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).withColumn("h1", h1).withColumn("h2", h2)
-    if distribute == "copartition":
-        probed = _probe_copartition(keyed, blobs, materialize)
-    else:
-        probed = _probe_broadcast(keyed, blobs, materialize)
-    definitely_new = probed.filter(~F.col("_maybe")).select(*cand_cols)
-    maybe = probed.filter(F.col("_maybe")).select(*cand_cols)
-    confirmed_new = maybe.join(seen, "url", "left_anti")
-    return definitely_new.unionByName(confirmed_new)
+    return seenfilter.prefilter(
+        candidates, seen, n_buckets, blobs, _contains, materialize
+    )

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from news_please_spark.functions.urls import url_bucket
 from news_please_spark.state import SnapshotCatalog
 
 
@@ -63,7 +64,7 @@ class VersionedArticleStore:
         """Stage both tables, then CAS-commit snapshot `snap` (raises
         state.CommitConflict if another writer committed it first)."""
         tx = self.catalog.begin(expected=snap - 1)
-        bucket = F.pmod(F.xxhash64("url"), F.lit(self.buckets))
+        bucket = url_bucket("url", self.buckets)
         for name, df in (("current", current), ("archive", archive)):
             df.repartition(self.buckets, bucket).write.mode("overwrite").parquet(
                 tx.path(name)

@@ -86,8 +86,7 @@ def test_insert_compacts_deletion_holes_before_fill():
 # -- Spark-level contract ---------------------------------------------------
 
 
-@pytest.mark.parametrize("distribute", ["broadcast", "copartition"])
-def test_merged_blobs_cover_both_deltas(spark, distribute):
+def test_merged_blobs_cover_both_deltas(spark):
     a = _urls(spark, "wave-a", 400)
     b = _urls(spark, "wave-b", 300)
     blobs_a = build_cuckoo_blobs(a, BUCKETS, capacity=1024)
@@ -96,27 +95,26 @@ def test_merged_blobs_cover_both_deltas(spark, distribute):
 
     seen = a.unionByName(b)
     fresh = _urls(spark, "unseen", 200)
-    out = cuckoo_prefilter(
-        fresh.unionByName(seen), seen, BUCKETS, blobs=merged,
-        distribute=distribute,
-    )
+    out = cuckoo_prefilter(fresh.unionByName(seen), seen, BUCKETS, blobs=merged)
     got = {r.url for r in out.collect()}
     # exactness: every unseen url survives, every seen url is removed
     assert got == {r.url for r in fresh.collect()}
 
 
 def test_copartition_probe_tolerates_unmerged_deltas(spark):
-    a = _urls(spark, "wave-a", 200)
-    b = _urls(spark, "wave-b", 200)
+    """The cogroup probe answers against every delta blob of a bucket,
+    so the caller may pass the raw per-wave union without a merge pass:
+    none of 1000 seen candidates may pass as new (a probe that read only
+    one blob per bucket would let half of them through)."""
+    a = _urls(spark, "wave-a", 500)
+    b = _urls(spark, "wave-b", 500)
     deltas = build_cuckoo_blobs(a, BUCKETS, capacity=1024).unionByName(
         build_cuckoo_blobs(b, BUCKETS, capacity=1024)
     )
     seen = a.unionByName(b)
+    assert cuckoo_prefilter(seen, seen, BUCKETS, blobs=deltas).count() == 0
     fresh = _urls(spark, "unseen", 100)
-    out = cuckoo_prefilter(
-        fresh.unionByName(seen), seen, BUCKETS, blobs=deltas,
-        distribute="copartition",
-    )
+    out = cuckoo_prefilter(fresh.unionByName(seen), seen, BUCKETS, blobs=deltas)
     assert {r.url for r in out.collect()} == {r.url for r in fresh.collect()}
 
 
@@ -160,8 +158,8 @@ def test_engine_bit_exact_with_cuckoo_filter(spark):
     orders = {}
     for name, extra in (
         ("off", {}),
-        ("bloom", {"use_bloom": True, "seen_filter": "bloom"}),
-        ("cuckoo", {"use_bloom": True, "seen_filter": "cuckoo"}),
+        ("bloom", {"seen_filter": "bloom"}),
+        ("cuckoo", {"seen_filter": "cuckoo"}),
     ):
         cfg = FrontierConfig(
             budget_per_host=8, max_depth=3, seen_buckets=4,

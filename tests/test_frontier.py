@@ -10,9 +10,8 @@ from news_please_spark.oracle import CrawlConfig, CrawlOracle
 from news_please_spark.world import World
 
 
-def run_both(spark, n_pages, budget, max_depth, use_bloom=False, n_seeds=8,
-             salt_buckets=1, politeness_impl="window",
-             bloom_distribute="broadcast", fuse_seq=True):
+def run_both(spark, n_pages, budget, max_depth, seen_filter=None, n_seeds=8,
+             salt_buckets=1):
     world = World(n_pages=n_pages, n_seeds=n_seeds)
     oracle = CrawlOracle(world, CrawlConfig(budget_per_host=budget, max_depth=max_depth))
     o_order, o_seen = oracle.run()
@@ -24,11 +23,8 @@ def run_both(spark, n_pages, budget, max_depth, use_bloom=False, n_seeds=8,
         cfg=FrontierConfig(
             budget_per_host=budget,
             max_depth=max_depth,
-            use_bloom=use_bloom,
+            seen_filter=seen_filter,
             salt_buckets=salt_buckets,
-            politeness_impl=politeness_impl,
-            bloom_distribute=bloom_distribute,
-            fuse_seq=fuse_seq,
         ),
     )
     res = engine.run(world.seed_urls())
@@ -56,7 +52,7 @@ def test_bloom_and_salted_topk_are_exact(spark):
     """The scale paths (bloom URL-seen prefilter, skew-salted politeness
     top-k) must not change results by one bit."""
     o_order, o_seen, e_order, e_seen, _ = run_both(
-        spark, 400, 8, 3, use_bloom=True, salt_buckets=8
+        spark, 400, 8, 3, seen_filter="bloom", salt_buckets=8
     )
     assert e_seen == o_seen
     assert e_order == o_order
@@ -101,29 +97,51 @@ def test_seq_guard_is_byte_keyed(spark):
     assert res2.fetched == 400
 
 
-def test_fused_seq_matches_unfused(spark):
+def test_fused_seq_matches_unfused(spark, monkeypatch):
     """The fused mark+seq checkpoint (one job per wave) must be
-    bit-exact vs the oracle AND vs the unfused two-job path; the
-    default config actually takes the fused path on small waves."""
+    bit-exact vs the oracle AND vs the unfused two-job window path; the
+    default config actually takes the fused path on small waves. The
+    window path is reached when the size predictor (2× last wave's
+    fetch count) declines fusion but the actual fetch set still fits
+    the one-task window: with SMALL_SEQ_LIMIT at the largest wave's
+    fetch count, the wave after it takes that path."""
+    import news_please_spark.operators.frontier as fr
+
     o_order, o_seen, e_order, e_seen, res = run_both(spark, 300, 8, 4)
     assert {m["seq_path"] for m in res.metrics} == {"fused_window"}
     assert e_order == o_order and e_seen == o_seen
-    o_order2, o_seen2, u_order, u_seen, res2 = run_both(
-        spark, 300, 8, 4, fuse_seq=False
+    monkeypatch.setattr(
+        fr, "SMALL_SEQ_LIMIT", max(m["fetched"] for m in res.metrics)
     )
-    assert {m["seq_path"] for m in res2.metrics} == {"window"}
-    assert u_order == e_order and u_seen == e_seen
+    _, _, u_order, u_seen, res2 = run_both(spark, 300, 8, 4)
+    assert "window" in {m["seq_path"] for m in res2.metrics}
+    assert u_order == o_order and u_seen == o_seen
 
 
 def test_bloom_copartition_probe_is_exact(spark):
-    """The cogroup (one-blob-per-task) bloom distribution — the
-    10^10-URL design point where blobs don't fit one broadcast — must
-    be bit-exact too."""
+    """The bucket-cogrouped (one-bucket-per-task) bloom probe — the
+    10^10-URL design point where blobs exceed any single JVM — must be
+    bit-exact on the unsalted politeness path too."""
     o_order, o_seen, e_order, e_seen, _ = run_both(
-        spark, 400, 8, 3, use_bloom=True, bloom_distribute="copartition"
+        spark, 400, 8, 3, seen_filter="bloom"
     )
     assert e_seen == o_seen
     assert e_order == o_order
+
+
+@pytest.mark.parametrize("salt_buckets", [1, 8])
+def test_cuckoo_filter_is_exact(spark, salt_buckets):
+    o_order, o_seen, e_order, e_seen, _ = run_both(
+        spark, 400, 8, 3, seen_filter="cuckoo", salt_buckets=salt_buckets
+    )
+    assert e_seen == o_seen
+    assert e_order == o_order
+
+
+@pytest.mark.parametrize("bad", ["", "none", "Bloom", "broadcast", True])
+def test_unknown_seen_filter_is_rejected_at_config(bad):
+    with pytest.raises(ValueError, match="seen_filter"):
+        FrontierConfig(seen_filter=bad)
 
 
 @pytest.mark.parametrize(
@@ -132,16 +150,16 @@ def test_bloom_copartition_probe_is_exact(spark):
         (250, 8),
         # budget < seeds-per-host: waves where deferred seeds and
         # children coexist in the frontier — the regression case for
-        # disc_key collisions at the k-th threshold (child keys start at
-        # DISC_STRIDE, so ties at the threshold are impossible)
+        # disc_key collisions (child keys start at DISC_STRIDE, so a
+        # deferred seed never ties with a child inside a host)
         (300, 2),
     ],
 )
-def test_threshold_politeness_is_exact(spark, n_pages, budget):
-    """The no-sort politeness path (k-th smallest disc_key threshold)
-    must match the oracle exactly too."""
+def test_salted_window_politeness_is_exact(spark, n_pages, budget):
+    """The skew-salted two-phase politeness window must match the
+    oracle exactly."""
     o_order, o_seen, e_order, e_seen, _ = run_both(
-        spark, n_pages, budget, 3, salt_buckets=8, politeness_impl="threshold"
+        spark, n_pages, budget, 3, salt_buckets=8
     )
     assert e_seen == o_seen
     assert e_order == o_order
@@ -189,31 +207,6 @@ def test_politeness_and_filters(spark):
             assert "/private/" not in u
 
 
-def test_threshold_join_broadcasts_under_aqe_off(spark):
-    """The wave loop runs with AQE scoped off, where Catalyst's static
-    estimate of the two-level threshold aggregate is schema-default
-    garbage — the threshold side must be EXPLICITLY broadcast or the
-    politeness join re-sorts the whole frontier (the cost the
-    threshold variant exists to avoid)."""
-    from pyspark.sql import functions as F
-
-    from news_please_spark.operators.ordering import mark_top_k_by_threshold
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = spark.range(10_000).select(
-            (F.col("id") % 50).cast("string").alias("host"),
-            F.col("id").alias("disc_key"),
-        )
-        marked = mark_top_k_by_threshold(df, "host", "disc_key", k=4)
-        plan = marked._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 def _persistent_rdd_count(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
@@ -246,3 +239,21 @@ def test_storage_released_across_consecutive_runs(spark):
     # everything the run persisted or checkpointed is released again
     assert after1 <= base
     assert after2 <= base
+
+
+def test_global_seq_on_empty_input_releases_its_cache(spark):
+    """An empty input leaves nothing persisted behind, with or without
+    materialize: the range-partitioned intermediate is released and
+    not handed to `caches`."""
+    from news_please_spark.operators.ordering import with_global_seq
+
+    empty = spark.createDataFrame([], "url string")
+    base = _persistent_rdd_count(spark)
+    for materialize in (True, False):
+        caches = []
+        res, nxt = with_global_seq(
+            empty, ["url"], 7, materialize=materialize, caches=caches
+        )
+        assert nxt == 7 and res.count() == 0 and caches == []
+        assert res.columns == ["url", "seq"]
+        assert _persistent_rdd_count(spark) == base

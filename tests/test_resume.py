@@ -134,3 +134,37 @@ def test_retention_expires_waves_and_resume_still_exact(spark, tmp_path):
     stitched = sorted(pre + collect_order(resumed.order), key=lambda t: t[2])
     assert stitched == full_order
     assert {r.url for r in resumed.seen.collect()} == full_seen
+
+
+def test_expire_waves_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last < 1 raises BEFORE touching disk: 0 would expire
+    nothing (retain_waves=0 would keep every wave) and -1 would fold
+    wave 0's seen delta into base/ before the catalog refused it."""
+    import os
+
+    import pytest
+
+    world = World(n_pages=300)
+    state = str(tmp_path / "state")
+    engine = FrontierEngine(
+        spark, world.webgraph_df(spark), world.robots_df(spark),
+        cfg=FrontierConfig(budget_per_host=8, max_depth=3, max_waves=3,
+                           state_dir=state),
+    )
+    engine.run(world.seed_urls())
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), state)
+            for d, dirs, files in os.walk(state)
+            for n in dirs + files
+        )
+
+    before = listing()
+    assert "wave=00000/seen" in before
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            engine.expire_waves(keep_last)
+        assert listing() == before
+    with pytest.raises(ValueError, match="retain_waves"):
+        FrontierConfig(retain_waves=0)

@@ -19,8 +19,7 @@ def _urls(spark, prefix, n):
     return spark.range(n).selectExpr(f"concat('https://{prefix}/', id) AS url")
 
 
-@pytest.mark.parametrize("distribute", ["broadcast", "copartition"])
-def test_merged_blobs_cover_both_deltas(spark, distribute):
+def test_merged_blobs_cover_both_deltas(spark):
     a = _urls(spark, "wave-a", 400)
     b = _urls(spark, "wave-b", 300)
     blobs_a = build_bloom_blobs(a, BUCKETS, capacity=1024)
@@ -29,29 +28,26 @@ def test_merged_blobs_cover_both_deltas(spark, distribute):
 
     seen = a.unionByName(b)
     fresh = _urls(spark, "unseen", 200)
-    out = bloom_prefilter(
-        fresh.unionByName(seen), seen, BUCKETS, blobs=merged,
-        distribute=distribute,
-    )
+    out = bloom_prefilter(fresh.unionByName(seen), seen, BUCKETS, blobs=merged)
     got = {r.url for r in out.collect()}
     # exactness: every unseen url survives, every seen url is removed
     assert got == {r.url for r in fresh.collect()}
 
 
 def test_copartition_probe_tolerates_unmerged_deltas(spark):
-    """The cogroup probe ORs a bucket's delta blobs on the fly, so the
-    caller may pass the raw per-wave union without a merge pass."""
-    a = _urls(spark, "wave-a", 200)
-    b = _urls(spark, "wave-b", 200)
+    """The cogroup probe answers against every delta blob of a bucket,
+    so the caller may pass the raw per-wave union without a merge pass:
+    none of 1000 seen candidates may pass as new (a probe that read only
+    one blob per bucket would let half of them through)."""
+    a = _urls(spark, "wave-a", 500)
+    b = _urls(spark, "wave-b", 500)
     deltas = build_bloom_blobs(a, BUCKETS, capacity=1024).unionByName(
         build_bloom_blobs(b, BUCKETS, capacity=1024)
     )
     seen = a.unionByName(b)
+    assert bloom_prefilter(seen, seen, BUCKETS, blobs=deltas).count() == 0
     fresh = _urls(spark, "unseen", 100)
-    out = bloom_prefilter(
-        fresh.unionByName(seen), seen, BUCKETS, blobs=deltas,
-        distribute="copartition",
-    )
+    out = bloom_prefilter(fresh.unionByName(seen), seen, BUCKETS, blobs=deltas)
     assert {r.url for r in out.collect()} == {r.url for r in fresh.collect()}
 
 
