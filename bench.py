@@ -41,7 +41,9 @@ def pretouch_conf() -> dict[str, str]:
     by EVERY bench entry point that times a crawl (main, --seen-child,
     --scaling-child) so the driver-recorded artifact measures the
     engine, not the kernel."""
-    mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    from news_please_spark.session import driver_memory
+
+    mem = driver_memory()
     return {
         "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch"
     }

@@ -6,13 +6,18 @@ helper_classes/parse_crawler.py:90-120, config/config.cfg:350-354) with
 an explicit frontier table and a deterministic total order that the
 pure-Python oracle (oracle.py) reproduces bit-for-bit.
 
+Once per crawl:
+  edges       — the webgraph through filters F2/F3/F4 and robots gate
+                F11 (all dst_url-only, so static for the crawl),
+                co-partitioned by src_url and cached (prepare())
+  seeds       — gated, deduplicated, disc_key 0; one checkpoint
+
 Per wave:
-  politeness  — skew-safe top-B per host (operators/ordering.top_k_per_key)
-  seq         — scalable global row numbering (ordering.with_global_seq)
-  expansion   — join fetch-set × webgraph edges (fetch side broadcast
-                when small), native filters F2/F3/F4, robots gate F11
-                (broadcast prefix-array join), min-disc_key dedup of
-                in-wave duplicates
+  politeness  — skew-safe top-B per host (ordering.mark_top_k_per_key)
+  seq         — global (depth, disc_key, url) row numbering, fused into
+                the politeness job for typical waves
+  expansion   — join fetch-set × gated edges (fetch side broadcast
+                when small), min-disc_key dedup of in-wave duplicates
   URL-seen    — optional partitioned bloom/cuckoo prefilter (bucket-
                 cogrouped probe) + exact left_anti confirm against the
                 `seen` table (D1)
@@ -82,16 +87,15 @@ def use_single_partition_seq(n_rows: int, est_bytes: int) -> bool:
     can't ride the single-task path."""
     return n_rows <= SMALL_SEQ_LIMIT and est_bytes <= SMALL_SEQ_BYTES
 # discovery-key encoding: children get (parent_seq + 1) * DISC_STRIDE +
-# link_index, seeds get their url-rank 0..n_seeds-1. Child keys start at
-# DISC_STRIDE, so keys stay unique within any frontier as long as
-# n_seeds < DISC_STRIDE (asserted at seed numbering) and every page has
-# < DISC_STRIDE outlinks (enforced per row by a raise_error branch in
-# the expansion select). Uniqueness makes disc_key a total order within
-# every host, so politeness and the in-wave dedup never tie-break on
-# anything but the key the oracle uses. 64-bit headroom: parent seq < 2^41
-# (~2.2e12 fetched pages — unreachable before the multiply overflows).
-# 2^22 admits multi-million-URL seed lists (a 10^10-URL frontier is
-# seeded from CC-scale URL dumps, not a hand-curated file).
+# link_index, seeds all get 0. Child keys start at DISC_STRIDE, so they
+# never tie with a seed, and are unique among children as long as every
+# page has < DISC_STRIDE outlinks (enforced per row by a raise_error
+# branch in the expansion select). Politeness sorts by (disc_key, url)
+# and seq by (depth, disc_key, url): seeds fall back to url order — the
+# oracle's url-rank keys give the same order — so neither ever
+# tie-breaks on anything the oracle does not use. 64-bit headroom:
+# parent seq < 2^41 (~2.2e12 fetched pages — unreachable before the
+# multiply overflows).
 DISC_STRIDE = 1 << 22
 
 
@@ -206,6 +210,16 @@ def allowed_url(url_col) -> F.Column:
     )
 
 
+def _observe_urls(df: DataFrame, obs: Observation) -> DataFrame:
+    """`df` observing its row count `n` and URL bytes `b` on the job
+    that materializes it — no extra scan."""
+    return df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.length("url")), F.lit(0)).alias("b"),
+    )
+
+
 def robots_blocked(path_col, prefixes_col) -> F.Column:
     """F11: true when any disallow prefix matches the URL path."""
     return F.when(
@@ -220,15 +234,9 @@ class FrontierEngine:
         webgraph: DataFrame,
         robots: DataFrame | None = None,
         cfg: FrontierConfig | None = None,
-        edges_partitioned_by_src: bool = False,
         site_configs=None,
     ):
-        """edges_partitioned_by_src: pass True when `webgraph` is already
-        hash-partitioned/bucketed by src_url (the Iceberg-table layout at
-        scale) — the big-wave shuffle-hash join then uses it directly
-        instead of building a second co-partitioned cached copy.
-
-        site_configs: optional siteconfig.SiteConfigs whose per-host
+        """site_configs: optional siteconfig.SiteConfigs whose per-host
         ignore_regex ANDs into the URL gate (sitelist.hjson analogue) —
         compiled into the same codegen'd Column, no join."""
         self.spark = spark
@@ -237,11 +245,7 @@ class FrontierEngine:
         # edges keyed by src_url; at scale this is an Iceberg table
         # bucketed by src_url so the per-wave join is co-partitioned.
         self.edges = webgraph
-        self._edges_coparted: DataFrame | None = (
-            webgraph if edges_partitioned_by_src else None
-        )
         self._exp_edges: DataFrame | None = None
-        self._exp_owned = False  # True when _exp_edges is OUR persist()
         if robots is not None:
             # persist: rebuilt-per-wave robots aggregation was a serial
             # job in every wave's critical path
@@ -263,63 +267,53 @@ class FrontierEngine:
 
     def _expansion_edges(self) -> DataFrame:
         """The edge table the wave loop expands through: hash-partitioned
-        by src_url, ROBOTS-PREFILTERED, cached. Robots are static for the
-        duration of a crawl, so the F11 gate is applied ONCE here instead
-        of per wave — a blocked dst edge is dead forever. This removes a
-        driver-serial ~O(hosts) broadcast build AND an O(edges-probed)
-        prefix scan from EVERY wave (both used to sit in the expand
-        phase's critical path). The shuffle-hash expansion join then
-        exchanges only the small fetch side; the edge scan stays
-        partition-local every wave. At 100 TB this is the Iceberg edges
-        table bucketed by src_url, robots-joined once at crawl start
-        (or maintained incrementally as robots change)."""
+        by src_url, GATED, cached, with a `dst_host` column. The URL gate
+        (F2/F3/F4 + per-site rules) and robots (F11) only look at
+        dst_url and are static for the duration of a crawl, so both are
+        applied ONCE here instead of per wave — a gated-out dst edge is
+        dead forever, so no regex scan, host derivation, robots
+        broadcast or prefix scan sits in any wave's critical path. The
+        shuffle-hash expansion join then exchanges only the small fetch
+        side; the edge scan stays partition-local every wave. At 100 TB
+        this is the Iceberg edges table bucketed by src_url, gated once
+        at crawl start (or maintained incrementally as robots change)."""
         if self._exp_edges is not None:
             return self._exp_edges
-        base = self._edges_coparted
-        if base is None:
-            n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            base = self.edges.repartition(n, "src_url")
-        if self.robots_by_host is None:
-            # nothing to filter: reuse the caller's co-partitioned cache
-            # as-is when they provided one
-            if self._edges_coparted is not None:
-                self._exp_edges = self._edges_coparted
-                return self._exp_edges
-            filtered = base
-        else:
-            # filter preserves the src_url partitioning — no new shuffle
-            filtered = (
-                base.withColumn("_dhost", url_host(F.col("dst_url")))
-                .join(F.broadcast(self.robots_by_host),
-                      F.col("_dhost") == F.col("host"), "left")
-                .filter(
-                    ~robots_blocked(url_path(F.col("dst_url")), F.col("prefixes"))
-                )
-                .drop("_dhost", "host", "prefixes")
-            )
-        self._exp_edges = filtered.persist()
-        self._exp_owned = True
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        # the filter preserves the src_url partitioning — no new shuffle
+        edges = self.edges.repartition(n, "src_url").withColumn(
+            "dst_host", url_host(F.col("dst_url"))
+        )
+        keep = self._url_gate(F.col("dst_url"))
+        if self.robots_by_host is not None:
+            edges = edges.join(F.broadcast(self.robots_by_host),
+                               F.col("dst_host") == F.col("host"), "left")
+            # one CASE over the join output, not an AND Catalyst would
+            # split and push below the exchange: there a computed
+            # dst_url (a generated webgraph) is re-evaluated once per
+            # reference in the gate (4× the prepare time measured on a
+            # 100k-page World)
+            keep = F.when(
+                keep, ~robots_blocked(url_path(F.col("dst_url")), F.col("prefixes"))
+            ).otherwise(False)
+        self._exp_edges = edges.filter(keep).drop("host", "prefixes").persist()
         self._exp_edges.count()
         return self._exp_edges
 
     def prepare(self) -> None:
-        """Materialize the one-time caches (robots-filtered co-partitioned
-        edges) outside the timed crawl loop — table prep, not crawling."""
+        """Materialize the one-time caches (gated co-partitioned edges)
+        outside the timed crawl loop — table prep, not crawling."""
         self._expansion_edges()
 
     def close(self) -> None:
         """Release the engine's long-lived caches (robots aggregate +
-        the robots-filtered co-partitioned edge cache). Call when the
-        engine is done — on a long-lived session the caches otherwise
-        accrete across engines. Caches the CALLER handed in
-        (edges_partitioned_by_src=True with no robots filtering) are
-        the caller's to release and are left alone. Idempotent; the
-        engine stays usable (both caches are plain persists over live
-        plans — a later run() transparently rebuilds them)."""
-        if self._exp_owned and self._exp_edges is not None:
-            release_df(self._exp_edges)
-            self._exp_edges = None
-            self._exp_owned = False
+        the gated co-partitioned edge cache). Call when the engine is
+        done — on a long-lived session the caches otherwise accrete
+        across engines. Idempotent; the engine stays usable (both caches
+        are plain persists over live plans — a later run()
+        transparently rebuilds them)."""
+        release_df(self._exp_edges)
+        self._exp_edges = None
         if self.robots_by_host is not None:
             release_df(self.robots_by_host)
 
@@ -391,14 +385,31 @@ class FrontierEngine:
     def run(
         self, seed_urls: list[str] | DataFrame, resume: bool = False
     ) -> CrawlResult:
-        spark, cfg = self.spark, self.cfg
-        metrics: list[dict] = []
-        order_parts: list[DataFrame] = []
+        # AQE is valuable for ad-hoc queries, but in the crawl every join
+        # is already routed by engine-held statistics (broadcast/shuffle-
+        # hash by measured bytes) and every input is a checkpointed leaf
+        # AQE cannot re-measure — so adaptive re-planning contributes
+        # only extra query-stage barriers (one Spark job per shuffle
+        # stage, the prologue's included) and was observed sporadically
+        # mis-planning long stages: 16-core crawls measured 88-125 s
+        # with AQE off vs 88-395 s with it on. Scope it off for the
+        # whole crawl, restore after.
+        spark = self.spark
+        _aqe_key = "spark.sql.adaptive.enabled"
+        _aqe_prev = spark.conf.get(_aqe_key)
+        spark.conf.set(_aqe_key, "false")
+        try:
+            return self._run_waves(*self._start(seed_urls, resume))
+        finally:
+            spark.conf.set(_aqe_key, _aqe_prev)
 
-        start_wave = 0
-        seq_base = 0
-        frontier = seen = None
-        _seed_caches: list[DataFrame] = []
+    def _start(self, seed_urls, resume: bool):
+        """The crawl's starting state: (frontier checkpoint, seen chunk
+        0, the checkpoint backing that chunk when it is a projection
+        over the frontier's, the chunk's {"n", "b"} row/URL-byte
+        stats, start wave, seq base) — from the seeds, or on resume
+        from the last complete wave under state_dir."""
+        spark, cfg = self.spark, self.cfg
         if resume and cfg.state_dir:
             # a crash mid _save_wave leaves a wave=NNNNN.tmp* staging
             # dir; it must neither count as a wave (the catalog's
@@ -438,46 +449,61 @@ class FrontierEngine:
                         if os.path.isdir(os.path.join(self._wave_dir(w), "seen"))
                     ]
                 )
-                seen = spark.read.parquet(*seen_paths)
-                start_wave = last + 1
-                seq_base = meta["seq_next"]
-        if frontier is None:
-            # seeds: sorted by url, disc_key = rank (mirrors oracle)
-            if isinstance(seed_urls, DataFrame):
-                seeds = seed_urls.select("url")
-            else:
-                seeds = spark.createDataFrame(
-                    [(u,) for u in seed_urls], "url string"
+                obs = Observation()
+                seen = _observe_urls(spark.read.parquet(*seen_paths), obs)
+                return (
+                    frontier.localCheckpoint(eager=True),
+                    seen.localCheckpoint(eager=True),
+                    None,
+                    obs.get,
+                    last + 1,
+                    meta["seq_next"],
                 )
-            seeds = seeds.filter(self._url_gate(F.col("url")))
-            if self.robots_by_host is not None:
-                seeds = (
-                    seeds.withColumn("host", url_host(F.col("url")))
-                    .join(F.broadcast(self.robots_by_host), "host", "left")
-                    .filter(~robots_blocked(url_path(F.col("url")), F.col("prefixes")))
-                    .select("url")
-                )
-            seeds, n_seeds = with_global_seq(
-                seeds, ["url"], 0, out="disc_key", caches=_seed_caches
+        if isinstance(seed_urls, DataFrame):
+            seeds = seed_urls.select("url")
+        else:
+            seeds = spark.createDataFrame([(u,) for u in seed_urls], "url string")
+        # every seed gets disc_key 0: politeness sorts by (disc_key, url)
+        # and seq by (depth, disc_key, url), so among seeds the url
+        # tie-break is the oracle's url-rank order, and child keys start
+        # at DISC_STRIDE > 0 — no global numbering job. A repeated seed
+        # is one frontier row.
+        seeds = (
+            seeds.filter(self._url_gate(F.col("url")))
+            .distinct()
+            .withColumn("host", url_host(F.col("url")))
+        )
+        if self.robots_by_host is not None:
+            seeds = seeds.join(F.broadcast(self.robots_by_host), "host", "left").filter(
+                ~robots_blocked(url_path(F.col("url")), F.col("prefixes"))
             )
-            if n_seeds >= DISC_STRIDE:
-                raise ValueError(
-                    f"{n_seeds} seeds ≥ DISC_STRIDE={DISC_STRIDE}: seed "
-                    "disc_keys would collide with child keys; raise "
-                    "DISC_STRIDE or split the seed list"
-                )
-            frontier = seeds.select(
-                F.col("url"),
-                url_host(F.col("url")).alias("host"),
+        obs = Observation()
+        frontier = _observe_urls(
+            seeds.select(
+                "url",
+                "host",
                 F.lit(0).alias("depth"),
-                F.col("disc_key"),
+                F.lit(0).cast("long").alias("disc_key"),
+            ),
+            obs,
+        ).localCheckpoint(eager=True)
+        # seen chunk 0 and init/seen read the frontier checkpoint — the
+        # seed plan runs once
+        seen = frontier.select("url")
+        if cfg.state_dir:
+            seen.write.mode("overwrite").parquet(
+                os.path.join(cfg.state_dir, "init", "seen")
             )
-            seen = frontier.select("url")
-            if cfg.state_dir:
-                seen.write.mode("overwrite").parquet(
-                    os.path.join(cfg.state_dir, "init", "seen")
-                )
+        return frontier, seen, frontier, obs.get, 0, 0
 
+    def _run_waves(
+        self, frontier, seen0, seen0_backing, seen0_stats, start_wave, seq_base
+    ) -> "CrawlResult":
+        import time as _time
+
+        spark, cfg = self.spark, self.cfg
+        metrics: list[dict] = []
+        order_parts: list[DataFrame] = []
         # `seen` is kept as a LIST of checkpointed chunks — never copied
         # per wave (copying the full seen set every wave would be O(seen)
         # × waves; at 10^10 URLs that is the difference between a crawl
@@ -488,22 +514,9 @@ class FrontierEngine:
         # bounds the count at O(log seen) and the total merge work at
         # O(seen·log seen) amortized, measured 3-8× faster late waves
         # than the old fixed every-N-waves full fold.
-        frontier = frontier.localCheckpoint(eager=True)
-        _obs_seen = Observation()
-        seen_chunks: list[DataFrame] = [
-            seen.observe(
-                _obs_seen,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(F.length("url")), F.lit(0)).alias("b"),
-            ).localCheckpoint(eager=True)
-        ]
-        chunk_sizes: list[int] = [int(_obs_seen.get["n"])]
-        seen_url_bytes: int = int(_obs_seen.get["b"])
-        # frontier + seen chunk 0 are checkpointed above — the seed
-        # numbering's internal range-partitioned cache is now dead state
-        for c in _seed_caches:
-            release_df(c)
-        _seed_caches.clear()
+        seen_chunks: list[DataFrame] = [seen0]
+        chunk_sizes: list[int] = [int(seen0_stats["n"])]
+        seen_url_bytes: int = int(seen0_stats["b"])
 
         # incremental filter state: blobs are built once from the initial
         # seen set with a FIXED geometry, then merged with each wave's
@@ -512,7 +525,7 @@ class FrontierEngine:
         if cfg.seen_filter:
             build_blobs, _, _ = _seen_filter_fns(cfg.seen_filter)
             blob_state = build_blobs(
-                seen_chunks[0], cfg.seen_buckets, capacity=cfg.bloom_capacity
+                seen0, cfg.seen_buckets, capacity=cfg.bloom_capacity
             ).localCheckpoint(eager=True)
 
         def seen_df() -> DataFrame:
@@ -521,33 +534,6 @@ class FrontierEngine:
                 s = s.unionByName(c)
             return s
 
-        # AQE is valuable for ad-hoc queries, but inside the wave loop
-        # every join is already routed by engine-held statistics
-        # (broadcast/shuffle-hash by measured bytes) and every input is
-        # a checkpointed leaf AQE cannot re-measure — so adaptive
-        # re-planning contributes only extra query-stage barriers per
-        # wave (and was observed sporadically mis-planning long stages:
-        # 16-core crawls measured 88-125 s with AQE off vs 88-395 s
-        # with it on). Scope it off for the loop, restore after.
-        _aqe_key = "spark.sql.adaptive.enabled"
-        _aqe_prev = spark.conf.get(_aqe_key)
-        spark.conf.set(_aqe_key, "false")
-        try:
-            return self._run_waves(
-                spark, cfg, frontier, seen_chunks, chunk_sizes,
-                seen_url_bytes, blob_state, order_parts, metrics,
-                start_wave, seq_base, seen_df,
-            )
-        finally:
-            spark.conf.set(_aqe_key, _aqe_prev)
-
-    def _run_waves(
-        self, spark, cfg, frontier, seen_chunks, chunk_sizes,
-        seen_url_bytes, blob_state, order_parts, metrics,
-        start_wave, seq_base, seen_df,
-    ) -> "CrawlResult":
-        import time as _time
-
         wave = start_wave
         # superseded-state tracking: the previous wave's politeness
         # checkpoint dies the moment the current one materializes (its
@@ -555,18 +541,20 @@ class FrontierEngine:
         # per-wave fetch checkpoints die at the next order-part
         # compaction. Releasing them deterministically keeps storage at
         # O(frontier + seen), not O(waves · frontier).
-        # the incoming frontier checkpoint's only consumer is wave 0's
-        # politeness checkpoint — chain it into the same release slot
-        prev_ann: DataFrame | None = frontier
+        # the incoming frontier checkpoint's only other consumer is wave
+        # 0's politeness checkpoint — chain it into the same release
+        # slot, unless it backs seen chunk 0
+        prev_ann: DataFrame | None = frontier if seen0_backing is None else None
         order_leaves: list[DataFrame] = []
-        # chunk_backing[i]: the wave's `new` checkpoint whose blocks back
-        # seen_chunks[i] when the chunk is a projection over it (None for
-        # chunks that own their root: the initial chunk and fold
-        # products). A folded-away wave-delta chunk can't free its
-        # backing checkpoint immediately — the next frontier still
-        # shares it — so it retires one wave later, once the next
-        # politeness checkpoint has consumed that frontier.
-        chunk_backing: list[DataFrame | None] = [None] * len(seen_chunks)
+        # chunk_backing[i]: the checkpoint whose blocks back
+        # seen_chunks[i] when the chunk is a projection over it (a wave's
+        # `new`, or the seed frontier for chunk 0; None for chunks that
+        # own their root: a resumed chunk 0 and fold products). A
+        # folded-away projection chunk can't free its backing checkpoint
+        # immediately — the next frontier may still share it — so it
+        # retires one wave later, once the next politeness checkpoint
+        # has consumed that frontier.
+        chunk_backing: list[DataFrame | None] = [seen0_backing]
         retire_next: list[DataFrame] = []
         # a fused ann checkpoint (politeness mark + seq in ONE job)
         # backs its wave's order part, so it retires at order compaction
@@ -736,10 +724,9 @@ class FrontierEngine:
                 .select(
                     F.col("dst_url").alias("url"),
                     # (p_seq + 1)*DISC_STRIDE keeps child keys disjoint
-                    # from the seed keys 0..n_seeds-1 (seeds deferred by
-                    # politeness would otherwise collide with children of
-                    # early parents), so disc_key is unique WITHIN EVERY
-                    # HOST.
+                    # from the seed key 0 (seeds deferred by politeness
+                    # would otherwise collide with children of early
+                    # parents), so disc_key is unique among children.
                     # the < DISC_STRIDE outlink precondition is enforced
                     # here, per row, inside codegen (a branch, not a
                     # scan) — a page with ≥ DISC_STRIDE (2^22) outlinks
@@ -759,14 +746,13 @@ class FrontierEngine:
                     )
                     .alias("disc_key"),
                     (F.col("p_depth") + 1).alias("depth"),
+                    F.col("dst_host").alias("host"),
                 )
-                .filter(self._url_gate(F.col("url")))
-                .withColumn("host", url_host(F.col("url")))
             )
-            # robots gate F11: already applied — _expansion_edges
-            # prefilters blocked dst edges once for the whole crawl
+            # filters F2/F3/F4 and robots gate F11: already applied —
+            # _expansion_edges gates dst edges once for the whole crawl
             # in-wave dedup: the lowest disc_key parent wins (its depth rides
-            # along in the struct — disc_key is globally unique)
+            # along in the struct — disc_key is unique among children)
             cand = (
                 cand.groupBy("url", "host")
                 .agg(F.min(F.struct("disc_key", "depth")).alias("m"))
@@ -800,16 +786,12 @@ class FrontierEngine:
             if seen_url_bytes > BROADCAST_SEEN_URL_BYTES:
                 seen = seen.hint("shuffle_hash")
             _obs_new = Observation()
-            new = (
-                cand.join(seen, "url", "left_anti")
-                .select("url", "host", "depth", "disc_key")
-                .observe(
-                    _obs_new,
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum(F.length("url")), F.lit(0)).alias("b"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            new = _observe_urls(
+                cand.join(seen, "url", "left_anti").select(
+                    "url", "host", "depth", "disc_key"
+                ),
+                _obs_new,
+            ).localCheckpoint(eager=True)
             n_new = int(_obs_new.get["n"])
             seen_url_bytes += int(_obs_new.get["b"])
             frontier_rows += n_new

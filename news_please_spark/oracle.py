@@ -14,8 +14,12 @@ total order:
   * children of fetched pages pass filters F2/F3/F4/F11, are deduped
     against the URL-seen set *at enqueue time*, and enter the frontier
     with disc_key = (parent_seq + 1) * DISC_STRIDE + link_index (min
-    over parents) — disjoint from the seed keys 0..n_seeds-1, so every
-    disc_key is unique within any frontier;
+    over parents) — disjoint from the seed keys 0..n_seeds-1 (the
+    seeds' url-rank), so every disc_key is unique within any frontier.
+    Any seed keys below DISC_STRIDE that never fall as the URL rises
+    give the same order: seeds compare with each other by url order
+    (equal keys fall to the url tie-break) and with children as smaller
+    keys. The engine gives every seed 0;
   * unfetched frontier rows carry over unchanged.
 
 The Spark engine (operators/frontier.py) must reproduce `crawl_order`

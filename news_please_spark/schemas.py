@@ -90,7 +90,8 @@ FRONTIER = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("host", T.StringType(), False),
         T.StructField("depth", T.IntegerType(), False),
-        T.StructField("disc_key", T.LongType(), False),  # parent_seq*1024+link_idx
+        # seeds 0; children (parent_seq + 1) * DISC_STRIDE + link_index
+        T.StructField("disc_key", T.LongType(), False),
     ]
 )
 

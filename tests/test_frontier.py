@@ -257,3 +257,89 @@ def test_global_seq_on_empty_input_releases_its_cache(spark):
         assert nxt == 7 and res.count() == 0 and caches == []
         assert res.columns == ["url", "seq"]
         assert _persistent_rdd_count(spark) == base
+
+
+class _RepeatedSeedWorld(World):
+    """World whose seed list names its first three seeds twice."""
+
+    def seed_urls(self) -> list[str]:
+        seeds = super().seed_urls()
+        return seeds + seeds[:3]
+
+
+def test_duplicate_seed_urls_match_oracle(spark):
+    """A repeated seed URL is one frontier row: fetched once, in the
+    oracle's order."""
+    world = _RepeatedSeedWorld(n_pages=300)
+    assert len(world.seed_urls()) > len(set(world.seed_urls()))
+    o_order, o_seen = CrawlOracle(
+        world, CrawlConfig(budget_per_host=8, max_depth=3)
+    ).run()
+    engine = FrontierEngine(
+        spark,
+        world.webgraph_df(spark),
+        robots=world.robots_df(spark),
+        cfg=FrontierConfig(budget_per_host=8, max_depth=3),
+    )
+    res = engine.run(world.seed_urls())
+    rows = res.order.select("url", "depth", "seq", "wave").collect()
+    e_order = sorted(((r.url, r.depth, r.seq, r.wave) for r in rows), key=lambda t: t[2])
+    assert e_order == o_order
+    assert {r.url for r in res.seen.collect()} == o_seen
+    res.release()
+    engine.close()
+
+
+def test_expansion_edges_are_gated_once(spark):
+    """The cached edge table is the raw webgraph through filters
+    F2/F3/F4 and robots F11 (the oracle's Python gate, computed
+    independently), with dst_host == url_host(dst_url) on every row."""
+    from pyspark.sql import functions as F
+
+    from news_please_spark.functions.urls import url_host
+    from news_please_spark.oracle import host_of
+
+    world = World(n_pages=400)
+    webgraph = world.webgraph_df(spark)
+    engine = FrontierEngine(
+        spark, webgraph, robots=world.robots_df(spark), cfg=FrontierConfig()
+    )
+    allowed = CrawlOracle(world)._allowed
+    raw = webgraph.select("src_url", "dst_url", "link_index").collect()
+    expected = sorted(
+        (r.src_url, r.dst_url, r.link_index) for r in raw if allowed(r.dst_url)
+    )
+    assert 0 < len(expected) < len(raw)  # the gate drops some edges
+
+    edges = engine._expansion_edges()
+    got = edges.select("src_url", "dst_url", "link_index", "dst_host").collect()
+    assert sorted((r.src_url, r.dst_url, r.link_index) for r in got) == expected
+    assert all(r.dst_host == host_of(r.dst_url) for r in got)
+    assert edges.filter(
+        ~F.col("dst_host").eqNullSafe(url_host(F.col("dst_url")))
+    ).count() == 0
+    engine.close()
+
+
+def test_prologue_submits_at_most_three_jobs(spark):
+    """Starting a crawl (max_waves=0, no state_dir) is one seed
+    checkpoint plus the robots broadcast — no seed numbering jobs."""
+    world = World(n_pages=300)
+    engine = FrontierEngine(
+        spark,
+        world.webgraph_df(spark),
+        robots=world.robots_df(spark),
+        cfg=FrontierConfig(budget_per_host=8, max_depth=3, max_waves=0),
+    )
+    sc = spark.sparkContext
+    group = "frontier-prologue-jobs"
+    sc.setJobGroup(group, "prologue job count")
+    try:
+        res = engine.run(world.seed_urls())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res.waves == 0 and res.fetched == 0
+    assert 1 <= n_jobs <= 3, n_jobs
+    res.release()
+    engine.close()
