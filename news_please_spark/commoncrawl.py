@@ -12,23 +12,31 @@ ONE declarative pipeline over the engine's existing tiers:
                                   charset decode, E1-E5+V1-V7 extraction
   VersionedArticleStore.merge   — set-oriented MERGE with CAS commit
   completed log                 — a SnapshotCatalog table of done paths,
-                                  committed atomically WITH the merge
+                                  committed AFTER the merge as its own
+                                  snapshot (two commits, not one
+                                  transaction: see the crash-idempotence
+                                  item in ROADMAP.md)
 
 Scale notes (the real CC-NEWS firehose):
   * the inventory is O(10^5) paths — a driver-side list is the correct
     grain (the reference iterates it serially; here it only selects
     which files the cluster reads, and each WARC becomes one input
     split via binaryFile);
-  * extraction parallelism is per-record after the WARC scan explodes
-    records — fat files don't serialize the pipeline;
-  * idempotence is structural: completed paths anti-join away BEFORE
-    any byte of WARC is read, so a resumed job re-reads nothing.
+  * extraction runs in the file-scan stage, one task per WARC: the
+    records a file explodes into are extracted by the task that read
+    it, so one fat file is one long task;
+  * completed paths anti-join away BEFORE any byte of WARC is read, so
+    a re-run after a finished pass re-reads nothing;
+  * the pass counts nothing twice: row counts ride the write jobs as
+    Observations (SnapshotCatalog's Transaction.write_table), and the
+    article count is the store snapshot's observed `current_rows`.
 """
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,19 +72,19 @@ class CompletedWarcLog:
         return self.spark.read.parquet(*dirs).distinct()
 
     def append(self, new_paths: DataFrame) -> int:
-        delta = new_paths.distinct()
+        """Commit `new_paths` as one delta; a path logged twice is one
+        member, because paths() deduplicates on read."""
         tx = self.catalog.begin()
-        delta.coalesce(1).write.mode("overwrite").parquet(tx.path("paths"))
-        return tx.commit({"n_delta": delta.count()})
+        n = tx.write_table("paths", new_paths.coalesce(1))
+        return tx.commit({"n_delta": n})
 
     def compact(self) -> int:
         """Fold every delta into one snapshot and expire the rest —
         run occasionally so a years-long log doesn't accrete thousands
         of tiny delta files."""
-        merged = self.paths()
         tx = self.catalog.begin()
-        merged.coalesce(1).write.mode("overwrite").parquet(tx.path("paths"))
-        snap = tx.commit({"n": merged.count(), "compacted": True})
+        n = tx.write_table("paths", self.paths().coalesce(1))
+        snap = tx.commit({"n": n, "compacted": True})
         self.catalog.expire_snapshots(keep_last=1)
         return snap
 
@@ -105,8 +113,8 @@ class CdxLog:
 
     def append(self, delta: DataFrame) -> int:
         tx = self.catalog.begin()
-        delta.write.mode("overwrite").parquet(tx.path("cdx"))
-        return tx.commit({"n_delta": delta.count()})
+        n = tx.write_table("cdx", delta)
+        return tx.commit({"n_delta": n})
 
 
 def extract_commoncrawl(
@@ -128,8 +136,10 @@ def extract_commoncrawl(
     are flagged across passes — the write-side payload-dedup record
     the reference's CommonCrawl reader consumes.
 
-    Returns {"files": n_processed, "articles": n_merged, "snapshot":
-    store snapshot id or None when nothing was new}.
+    Returns {"files": n_processed, "articles": rows of the store's
+    `current` table after the merge (the snapshot's `current_rows`,
+    observed on its write), "snapshot": store snapshot id or None when
+    nothing was new}.
     """
     from news_please_spark import from_warc
     from news_please_spark.sources.flat import warc_index
@@ -169,7 +179,9 @@ def extract_commoncrawl(
     # re-execution of the lazy `todo` plan — a refreshed file listing on
     # the mutable WARC directory (or a racing writer) could otherwise
     # mark files complete that this run never extracted, and the
-    # anti-join would skip them forever
-    log.append(spark.createDataFrame([(p,) for p in paths], "path string"))
-    n_articles = store.current(snap).count()
+    # anti-join would skip them forever. Built from pandas through
+    # Arrow, the list is a local relation in the JVM: no job over it
+    # needs a Python worker.
+    log.append(spark.createDataFrame(pd.DataFrame({"path": paths}), "path string"))
+    n_articles = store.catalog.read_meta(snap)["current_rows"]
     return {"files": len(paths), "articles": n_articles, "snapshot": snap}

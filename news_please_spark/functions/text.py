@@ -200,6 +200,7 @@ def winnow_fingerprint_rows(df, id_col: str = "doc_id", text_col: str = "text",
     import re
 
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    id_type = df.schema[id_col].dataType.simpleString()
 
     def gen(batches):
         import pandas as pd
@@ -226,12 +227,12 @@ def winnow_fingerprint_rows(df, id_col: str = "doc_id", text_col: str = "text",
                         ids.append(doc_id)
                         poss.append(pos)
                         fps.append(best)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
+            yield pd.DataFrame({id_col: pd.Series(ids, dtype="object"),
                                 "pos": pd.Series(poss, dtype="int32"),
                                 "fp": pd.Series(fps, dtype="object")})
 
     return df.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, pos int, fp string"
+        gen, f"{id_col} {id_type}, pos int, fp string"
     )
 
 

@@ -79,6 +79,7 @@ def compaction_plan(
         pdf["bin_id"] = pdf["bin_id"].astype("int32")
         return pdf
 
+    part_type = rows.schema["part"].dataType.simpleString()
     return rows.groupBy("part").applyInPandas(
-        _pack, "part string, file string, size_bytes long, bin_id int"
+        _pack, f"part {part_type}, file string, size_bytes long, bin_id int"
     )

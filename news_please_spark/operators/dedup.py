@@ -149,7 +149,9 @@ def simhash_signatures(
         for pdf in batches:
             ids, sigs = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split((text or "").lower().strip(" "))
+                if text is None:
+                    continue  # no tokens: explode emits no row either
+                toks = ws.split(text.lower().strip(" "))
                 hs = np.empty(len(toks), dtype=np.uint64)
                 for i, t in enumerate(toks):
                     h = cache.get(t)

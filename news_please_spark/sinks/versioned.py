@@ -62,14 +62,14 @@ class VersionedArticleStore:
 
     def _commit(self, current: DataFrame, archive: DataFrame, snap: int) -> None:
         """Stage both tables, then CAS-commit snapshot `snap` (raises
-        state.CommitConflict if another writer committed it first)."""
+        state.CommitConflict if another writer committed it first).
+        meta.json records `current_rows`, the row count of `current`
+        observed on its write."""
         tx = self.catalog.begin(expected=snap - 1)
-        bucket = url_bucket("url", self.buckets)
-        for name, df in (("current", current), ("archive", archive)):
-            df.repartition(self.buckets, bucket).write.mode("overwrite").parquet(
-                tx.path(name)
-            )
-        tx.commit({"snapshot": snap})
+        by_bucket = (self.buckets, url_bucket("url", self.buckets))
+        n_current = tx.write_table("current", current, repartition=by_bucket)
+        tx.write_table("archive", archive, repartition=by_bucket)
+        tx.commit({"snapshot": snap, "current_rows": n_current})
 
     # -- the merge -----------------------------------------------------------
     def merge(self, batch: DataFrame, order_col: str = "date_download") -> int:
@@ -92,15 +92,20 @@ class VersionedArticleStore:
         w = Window.partitionBy("url").orderBy(
             F.col(order_col).asc_nulls_first(), content_key
         )
-        # The batch's lineage can be arbitrarily expensive (the CC
+        # _rk ranks a url's rows in the batch and _n counts them; both
+        # windows share the url partitioning, so one exchange serves
+        # them. The batch's lineage can be arbitrarily expensive (the CC
         # pipeline feeds WARC-parse + full extraction straight in), and
-        # this plan consumes it from several branches (_n aggregate,
-        # the current write, the archive write) — without a cut each
-        # branch re-executes the whole extraction. One persist, released
-        # deterministically after the commit.
-        ranked = batch.withColumn("_rk", F.row_number().over(w)).persist()
-        b_count = ranked.groupBy("url").agg(F.max("_rk").alias("_n"))
-        b = ranked.join(b_count, "url")
+        # this plan consumes it from two branches (the current write,
+        # the archive write) — without a cut each branch re-executes
+        # the whole extraction. One persist, released deterministically
+        # after the commit. `url` stays the tables' first column.
+        b = (
+            batch.select("url", *[c for c in batch.columns if c != "url"])
+            .withColumn("_rk", F.row_number().over(w))
+            .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("url")))
+            .persist()
+        )
 
         if cur is None:
             base = b.withColumn("_base_version", F.lit(0))
@@ -159,7 +164,7 @@ class VersionedArticleStore:
         try:
             self._commit(current_out, archive_out, new_snap)
         finally:
-            ranked.unpersist()
+            b.unpersist()
         return new_snap
 
 

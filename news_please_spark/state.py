@@ -535,19 +535,26 @@ class Transaction:
         """Staging path for one table/artifact inside the snapshot."""
         return os.path.join(self.staging_dir, name)
 
-    def write_table(self, name: str, df, repartition=None, partition_by=None) -> None:
+    def write_table(self, name: str, df, repartition=None, partition_by=None) -> int:
         """Stage a DataFrame as parquet under `name` (optionally
-        repartitioned first — pass (num, *cols_or_exprs)).
+        repartitioned first — pass (num, *cols_or_exprs)) and return
+        its row count, observed on the write job itself (no second
+        job re-reads or recomputes `df` to count it).
         `partition_by` writes hive-style partition dirs (e.g. by date
         or host bucket): later reads through read_table prune whole
         partitions when filtered on those columns — the catalog-layer
         image of Iceberg partition pruning."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         if repartition is not None:
             df = df.repartition(*repartition)
-        w = df.write.mode("overwrite")
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
+        return obs.get["n"]
 
     def read_table(self, spark, name: str):
         """Read back a STAGED table, pre-commit — the audit step of

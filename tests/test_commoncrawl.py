@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from news_please_spark.commoncrawl import CompletedWarcLog, extract_commoncrawl
+from news_please_spark.commoncrawl import CdxLog, CompletedWarcLog, extract_commoncrawl
 from news_please_spark.sinks.versioned import VersionedArticleStore
 from news_please_spark.sources.warc import write_warc
 from news_please_spark.synth import DocWorld
@@ -96,8 +96,6 @@ def test_completed_log_is_append_only_and_compactable(spark, tmp_path):
 
 
 def test_cdx_log_cross_pass_revisits(spark, tmp_path):
-    from news_please_spark.commoncrawl import CdxLog
-
     world = DocWorld(2 * N)
     store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
     log = CompletedWarcLog(spark, str(tmp_path / "done"))
@@ -145,3 +143,93 @@ def test_cdx_log_cross_pass_revisits(spark, tmp_path):
     assert new_rows[u1].revisit == 0            # edited payload is an original
     # pass-1 rows were committed first and stay untouched
     assert sum(r.revisit for r in rows1) == 0
+
+
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn submitted), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_articles_is_the_current_row_count(spark, tmp_path):
+    """`articles` (the snapshot's observed current_rows) equals a count
+    of the committed current table for a batch holding one url twice, a
+    re-crawl pass and a pass with no 200 text/html record."""
+    world = DocWorld(2 * N)
+    store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
+    log = CompletedWarcLog(spark, str(tmp_path / "done"))
+    glob = str(tmp_path / "*.warc.gz")
+
+    def page(d, edit=""):
+        return (world.spec(d).url, 200, "text/html",
+                (world.html(d) + edit).encode("utf-8"))
+
+    def run(name, records):
+        write_warc(str(tmp_path / name), records)
+        r = extract_commoncrawl(spark, glob, store, log)
+        assert r["files"] == 1
+        assert r["articles"] == store.current(r["snapshot"]).count(), name
+        return r
+
+    # doc 0 twice in one batch: one current row, one archived version
+    r1 = run("CC-NEWS-20230115120000-00000.warc.gz",
+             [page(d) for d in range(N)] + [page(0, "<!-- again -->")])
+    assert r1["articles"] == N
+    # re-crawl of every other doc plus N/2 new ones
+    r2 = run("CC-NEWS-20230115120001-00001.warc.gz",
+             [page(d, "<!-- v2 -->") for d in range(0, N, 2)]
+             + [page(d) for d in range(N, N + N // 2)])
+    assert r2["articles"] == N + N // 2
+    # nothing passes the status/content-type gate: empty batch,
+    # current unchanged
+    r3 = run("CC-NEWS-20230115120002-00002.warc.gz",
+             [(world.spec(N).url, 404, "text/html", b"gone"),
+              (world.spec(N + 1).url, 200, "image/png", b"\x89PNG")])
+    assert r3["articles"] == r2["articles"]
+    assert r3["snapshot"] == r2["snapshot"] + 1
+
+
+def test_extract_pass_job_budget(spark, tmp_path):
+    """One pass over a 12-doc WARC into a fresh store, counted by job
+    group. Before row counts rode the write jobs, the pass submitted 18
+    jobs: a count after the log write, a read and count of `current`
+    for the article count, a distinct on the log delta and an
+    aggregate-and-join for the batch ranking. Now it submits 8."""
+    world = DocWorld(N)
+    _write_warcs(tmp_path, world, 1)
+    store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
+    log = CompletedWarcLog(spark, str(tmp_path / "done"))
+    r, n_jobs = _jobs(
+        spark, "commoncrawl-pass-jobs",
+        lambda: extract_commoncrawl(spark, str(tmp_path / "*.warc.gz"), store, log),
+    )
+    assert r == {"files": 1, "articles": N, "snapshot": 0}
+    assert n_jobs <= 10, n_jobs
+
+
+def test_cdx_append_counts_on_its_write(spark, tmp_path):
+    """CdxLog.append takes n_delta from the write job: it submits no
+    more jobs than writing the same un-persisted delta alone, and
+    n_delta is still the delta's row count."""
+    from news_please_spark.operators.cdx import cdx_from_warc_records, cdx_index_incremental
+    from news_please_spark.sources.warc import split_warc_records
+
+    world = DocWorld(N)
+    paths = _write_warcs(tmp_path, world, 1)
+    recs = split_warc_records(spark.read.format("binaryFile").load(paths))
+    delta = cdx_index_incremental(
+        cdx_from_warc_records(recs), None, tiebreak_col="record_index"
+    )
+    _, n_write = _jobs(
+        spark, "cdx-write-alone",
+        lambda: delta.write.mode("overwrite").parquet(str(tmp_path / "alone")),
+    )
+    cdx = CdxLog(spark, str(tmp_path / "cdx"))
+    snap, n_append = _jobs(spark, "cdx-append", lambda: cdx.append(delta))
+    assert n_append <= n_write, (n_append, n_write)
+    assert cdx.catalog.read_meta(snap)["n_delta"] == delta.count() == N

@@ -98,3 +98,16 @@ def test_nfd_large_inventory_matches_reference_loop(spark):
             else:
                 b, load = b + 1, s
             assert got[(part, f)] == b
+
+
+def test_int_part_keeps_its_type(spark):
+    # the plan's `part` column takes its type from the input, so an
+    # integer-partitioned table (e.g. a bucket id) plans without a cast
+    df = spark.createDataFrame(
+        [(0, "a", 60), (0, "b", 60), (1, "c", 10)],
+        "part int, file string, size_bytes long",
+    )
+    out = compaction_plan(df, target_bytes=100)
+    assert out.schema["part"].dataType.simpleString() == "int"
+    got = {(r.part, r.file): r.bin_id for r in out.collect()}
+    assert got == {(0, "a"): 0, (0, "b"): 1, (1, "c"): 0}

@@ -673,3 +673,27 @@ def test_winnow_pairs_min_shared_floor(spark):
     loose = winnow_plagiarism_pairs(docs, min_shared=1).collect()
     assert len(loose) >= 1 and all(r.shared >= 1 for r in loose)
     assert all(r.shared >= 2 for r in strict)
+
+
+def test_simhash_null_text_emits_no_signature_on_either_path(spark, docs):
+    # a NULL-text doc has no tokens: the xxhash64 explode path drops
+    # it, and the md5 kernel must drop it too; every other doc keeps
+    # the signature the per-token fold (simhash64) gives it
+    from news_please_spark.operators.dedup import simhash_signatures
+
+    df = docs.unionByName(
+        spark.createDataFrame([(9, None), (10, "")], "doc_id bigint, text string")
+    )
+    md5 = {r.doc_id: r._sig for r in simhash_signatures(df).collect()}
+    xx = {
+        r.doc_id
+        for r in simhash_signatures(df, token_hash="xxhash64").collect()
+    }
+    assert set(md5) == xx == {0, 1, 2, 3, 4, 10}
+    fold = {
+        r.doc_id: r.s
+        for r in df.where(F.col("text").isNotNull())
+        .select("doc_id", simhash64(F.col("text")).alias("s"))
+        .collect()
+    }
+    assert md5 == fold

@@ -511,3 +511,27 @@ def test_winnow_pandas_kernel_matches_column_fold(spark):
     )
     got = winnow_fingerprint_rows(df, k=5, w=4)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+
+
+def test_winnow_pandas_kernel_keeps_string_ids(spark):
+    # the kernel's id column takes its type from the input: string doc
+    # ids come back as the same strings, with the same fingerprints as
+    # the integer-keyed run over the same texts
+    from news_please_spark.functions.text import winnow_fingerprint_rows
+
+    texts = [
+        "one two three four five six seven eight",
+        "alpha beta gamma delta epsilon zeta",
+        "too short",
+    ]
+    by_int = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    by_str = spark.createDataFrame(
+        [(f"doc-{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
+    )
+    got = winnow_fingerprint_rows(by_str, k=5, w=4)
+    assert got.schema["doc_id"].dataType.simpleString() == "string"
+    exp = sorted(
+        (f"doc-{r.doc_id}", r.pos, r.fp)
+        for r in winnow_fingerprint_rows(by_int, k=5, w=4).collect()
+    )
+    assert exp and sorted(map(tuple, got.collect())) == exp

@@ -171,3 +171,25 @@ def test_savepath_trailing_slash_directory_quirk(spark):
         _one(spark, "%url_directory_string(40)", url="https://h.example.co/a/b/")
         == "a"
     )
+
+
+def test_meta_records_current_rows(spark, tmp_path):
+    """Every merge's snapshot meta carries `current_rows`, the row
+    count of its `current` table observed on the write: a first load,
+    a re-crawl plus a new url, two versions of one url in one batch,
+    and an empty batch."""
+    store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
+    batches = [
+        [("https://a.com/x", "t1", "2026-01-01 00:00:00"),
+         ("https://a.com/y", "u1", "2026-01-01 00:00:00")],
+        [("https://a.com/x", "t2", "2026-01-02 00:00:00"),
+         ("https://a.com/z", "w1", "2026-01-02 00:00:00")],
+        [("https://a.com/x", "t3", "2026-01-03 00:00:00"),
+         ("https://a.com/x", "t4", "2026-01-04 00:00:00")],
+        [],
+    ]
+    for rows in batches:
+        snap = store.merge(_batch(spark, rows))
+        meta = store.catalog.read_meta(snap)
+        assert meta["current_rows"] == store.current(snap).count(), snap
+    assert meta == {"snapshot": 3, "current_rows": 3}
