@@ -524,20 +524,13 @@ def run_pipeline(spark, n_pages: int, max_waves: int) -> tuple[float, int]:
         # one python phase per task: render the fetched page and run the
         # whole extraction chain on it (extract → clean → compare) —
         # no html strings cross Arrow at all
-        from news_please_spark.extraction.extract import (
-            _clean_candidate,
-            _compare_row,
-            _EXTRACTORS,
-            sanitize_html,
-        )
+        from news_please_spark.extraction.extract import extract_article
 
         for pdf in batches:
             rows = []
             for d in pdf["pid"].tolist():
                 spec_url = doc_world.spec(d).url
-                html = sanitize_html(doc_world.html(d))
-                cands = [_clean_candidate(ex(spec_url, html)) for ex in _EXTRACTORS]
-                r = _compare_row(spec_url, cands)
+                r = extract_article(spec_url, doc_world.html(d))
                 r["doc_id"] = f"doc{d}"
                 r["url"] = spec_url
                 rows.append(r)

@@ -7,7 +7,8 @@ Architecture (see SURVEY.md §7):
   - the URL frontier is a table, a crawl wave is a Spark job,
   - extraction is a vectorized map (Arrow pandas UDFs),
   - storage/versioning is a set-oriented MERGE,
-  - URL-seen is a partitioned bloom filter + exact anti-join confirm.
+  - URL-seen is an exact anti-join against the `seen` table, optionally
+    cut down first by a partitioned bloom or cuckoo filter.
 """
 
 __version__ = "0.2.0"
@@ -21,17 +22,17 @@ __version__ = "0.2.0"
 # semantics (see sources/fetch.py); production would plug an HTTP
 # resolver into the same seam.
 
-def from_html(spark, pages, fused: bool = True):
+def from_html(spark, pages):
     """pages: DataFrame(url, html) or list[(url, html)] → article rows
     (the from_html analogue, reference __init__.py:65-114)."""
     from news_please_spark.extraction.extract import extract_articles
 
     if not hasattr(pages, "select"):
         pages = spark.createDataFrame(pages, "url string, html string")
-    return extract_articles(pages, fused=fused)
+    return extract_articles(pages)
 
 
-def from_urls(spark, urls, responses, fused: bool = True):
+def from_urls(spark, urls, responses):
     """urls (list[str] or DataFrame(url)) × responses table → fetch
     (F1/F5/F6/S3/D4) → extraction chain → article rows (the from_urls
     analogue, reference __init__.py:116-169)."""
@@ -41,23 +42,23 @@ def from_urls(spark, urls, responses, fused: bool = True):
     if not hasattr(urls, "select"):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
     fetched = fetch_from_responses(urls, responses)
-    return extract_articles(fetched, fused=fused)
+    return extract_articles(fetched)
 
 
-def from_url(spark, url: str, responses, fused: bool = True):
+def from_url(spark, url: str, responses):
     """Single-URL convenience wrapper (reference __init__.py:116-127)."""
-    return from_urls(spark, [url], responses, fused=fused)
+    return from_urls(spark, [url], responses)
 
 
-def from_file(spark, path: str, responses, fused: bool = True):
+def from_file(spark, path: str, responses):
     """URL-file (one per line, blanks dropped) → from_urls (the
     from_file analogue, reference __init__.py:171-183)."""
     from news_please_spark.sources.flat import urls_from_file
 
-    return from_urls(spark, urls_from_file(spark, path), responses, fused=fused)
+    return from_urls(spark, urls_from_file(spark, path), responses)
 
 
-def from_warc(spark, warc_glob: str, fused: bool = True):
+def from_warc(spark, warc_glob: str):
     """WARC files → response records (200, text/html) → extraction
     chain → article rows (the from_warc analogue, reference
     __init__.py:28-63; record framing + charset detection in
@@ -75,7 +76,7 @@ def from_warc(spark, warc_glob: str, fused: bool = True):
         .filter(F.col("content_type").rlike("^text/html"))
         .select(F.col("target_uri").alias("url"), F.col("body").alias("html"))
     )
-    return extract_articles(pages, fused=fused)
+    return extract_articles(pages)
 
 
 def load_sitelist(text_or_path: str):

@@ -124,7 +124,6 @@ def extract_commoncrawl(
     log: CompletedWarcLog,
     start_date: str | None = None,
     end_date: str | None = None,
-    fused: bool = True,
     cdx: "CdxLog | None" = None,
 ) -> dict:
     """One incremental pass: extract every not-yet-done WARC matching
@@ -157,7 +156,7 @@ def extract_commoncrawl(
     paths = [r.path for r in todo.collect()]
     if not paths:
         return {"files": 0, "articles": 0, "snapshot": None}
-    articles = from_warc(spark, paths, fused=fused).withColumn(
+    articles = from_warc(spark, paths).withColumn(
         "date_download", F.current_timestamp()
     )
     snap = store.merge(articles)

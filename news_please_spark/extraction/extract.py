@@ -1,17 +1,19 @@
-"""The extraction chain (SURVEY.md §2.4-2.5) — vectorized end to end.
+"""The extraction chain (SURVEY.md §2.4-2.5), one definition.
 
-Pipeline:  fetched(url, html)
-   → candidates   (ONE Arrow-batched pandas UDF running every extractor:
-                   meta/dom/date/lang — the E1-E4 analogues; reference
-                   article_extractor.py:58-82 runs them sequentially per
-                   document, here they run per Arrow batch)
-   → cleaner      (native regexp chain over the candidates array, E5)
-   → comparer     (pandas UDF implementing the V1-V7 voting rules,
-                   reference extractor/comparer/*.py — a per-row
-                   aggregation across the candidates array, which is why
-                   it is not a groupBy)
-   → article      (P1 projection, native)
-   → spans        (interleaved text+media spans, the input_hint shape).
+`extract_article(url, html)` is the whole chain for one document:
+   sanitize     (comments/CDATA stripped once, the parser-visibility
+                 model every tag regex here assumes)
+   → extractors (meta/dom/date/lang — the E1-E4 analogues; reference
+                 article_extractor.py:58-82 runs them in the same order)
+   → cleaner    (tag strip, entity decode, whitespace collapse, trim
+                 on every candidate field, E5)
+   → comparer   (the V1-V7 voting rules, reference
+                 extractor/comparer/*.py, across the four candidates).
+
+`extract_articles` maps it over each Arrow batch in ONE pandas UDF
+(`extract_article_core_udf`) and does the P1 projection natively;
+`article_to_spans` turns articles into interleaved text+media spans
+(the input_hint shape).
 
 The container deliberately has no newspaper4k/readability/lxml — the
 extractors are from-scratch regex/cascade implementations of the same
@@ -27,12 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from news_please_spark.extraction.cleaner import (
-    _ENTITIES as _PY_ENTITIES,
-)
-from news_please_spark.extraction.cleaner import clean_candidates, empty_to_null
-from news_please_spark.functions.urls import canonical_host, url_host
-from news_please_spark.schemas import CANDIDATE
+from news_please_spark.functions.urls import canonical_host
 
 # ---------------------------------------------------------------------------
 # python-side scalar extractors (compiled once per worker)
@@ -552,21 +549,9 @@ def _lang_extractor(url: str, html: str) -> dict:
 _EXTRACTORS = [_meta_extractor, _dom_extractor, _date_extractor, _lang_extractor]
 
 
-@F.pandas_udf(T.ArrayType(CANDIDATE))
-def extract_candidates_udf(url: pd.Series, html: pd.Series) -> pd.Series:
-    out = []
-    for u, h in zip(url, html):
-        if h:
-            h = sanitize_html(h)
-            out.append([ex(u, h) for ex in _EXTRACTORS])
-        else:
-            out.append([])
-    return pd.Series(out)
-
-
 # ---------------------------------------------------------------------------
 # comparer V1-V7 (reference extractor/comparer/*.py) — per-document
-# aggregation across the candidates array, vectorized per Arrow batch.
+# votes across the four cleaned candidates.
 
 def _vote_title(cands: list[dict]) -> str | None:
     """V1 (comparer_title.py:7-82): most-frequent pairwise exact match;
@@ -676,56 +661,42 @@ _ARTICLE_CORE = T.StructType(
 )
 
 
-@F.pandas_udf(_ARTICLE_CORE)
-def compare_candidates_udf(url: pd.Series, cands: pd.Series) -> pd.DataFrame:
-    rows = []
-    for u, cl in zip(url, cands):
-        if cl is None:
-            cl = []
-        norm = []
-        for c in cl:
-            c = dict(c)
-            a = c.get("author")
-            # Arrow hands arrays back as numpy arrays whose truthiness is
-            # ambiguous — normalize to plain lists / None
-            c["author"] = list(a) if a is not None and len(a) > 0 else None
-            norm.append(c)
-        cl = norm
-        rows.append(
-            {
-                "title": _vote_title(cl),
-                "description": _prefer(cl, "description", "meta"),
-                "maintext": _vote_text(cl),
-                "image_url": _urljoin(u, _prefer(cl, "topimage", "meta")),
-                "authors": _prefer(cl, "author", "meta"),
-                "date_publish_str": _prefer(cl, "publish_date", "date_extractor"),
-                "language": _vote_language(cl),
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 # ---------------------------------------------------------------------------
-# fused fast path: extract → clean → compare in ONE Arrow pass.
-# The modular path above (candidates array as a real column, native
-# cleaner, separate comparer) is the introspectable API; fusing skips
-# two Arrow round-trips of the nested candidates array, which dominate
-# (~15×) the actual extraction work at scale.
+# cleaner E5 (reference pipeline/extractor/cleaner.py:22-99): its
+# compiled regexes applied to every text field of every candidate
 
+# Entity catalog, ordered so `&amp;` decodes LAST: bs4 (the reference's
+# parser) decodes in a single pass, so `&amp;lt;` means the literal text
+# `&lt;`, not `<` — replacing `&amp;` first would double-decode. Covers
+# the named + numeric forms that dominate real pages (curly quotes,
+# dashes, ellipsis, nbsp) beyond the XML five.
+_ENTITIES = [
+    ("&quot;", '"'), ("&#34;", '"'),
+    ("&#39;", "'"), ("&#x27;", "'"), ("&apos;", "'"),
+    ("&nbsp;", " "), ("&#160;", " "),
+    ("&lt;", "<"), ("&#60;", "<"),
+    ("&gt;", ">"), ("&#62;", ">"),
+    ("&lsquo;", "‘"), ("&#8216;", "‘"),
+    ("&rsquo;", "’"), ("&#8217;", "’"), ("&#x2019;", "’"),
+    ("&ldquo;", "“"), ("&#8220;", "“"),
+    ("&rdquo;", "”"), ("&#8221;", "”"),
+    ("&ndash;", "–"), ("&#8211;", "–"),
+    ("&mdash;", "—"), ("&#8212;", "—"),
+    ("&hellip;", "…"), ("&#8230;", "…"),
+    ("&amp;", "&"), ("&#38;", "&"),
+]
 _WS = re.compile(r"[ \t\x0b\r\f]+")
 _NL = re.compile(r" ?\n ?")
 _NLS = re.compile(r"\n{2,}")
 _TAG = re.compile(r"<[^>]+>")
-# entity table shared with the native chain — imported at module top
 
 
-def _py_clean(s: str | None) -> str | None:
-    """Python mirror of cleaner.clean_text (same regex chain; parity
-    asserted by tests against the native path)."""
+def _clean_text(s: str | None) -> str | None:
+    """strip tags → decode common entities → collapse whitespace → trim."""
     if s is None:
         return None
     out = _TAG.sub(" ", s)
-    for ent, rep in _PY_ENTITIES:
+    for ent, rep in _ENTITIES:
         out = out.replace(ent, rep)
     out = _WS.sub(" ", out)
     out = _NL.sub("\n", out)
@@ -736,7 +707,7 @@ def _py_clean(s: str | None) -> str | None:
 def _clean_candidate(c: dict) -> dict:
     c = dict(c)
     for f in ("title", "description", "text"):
-        c[f] = _py_clean(c[f])
+        c[f] = _clean_text(c[f])
     for f in ("topimage", "publish_date", "language"):
         c[f] = c[f].strip() if c[f] else c[f]
     if c.get("author"):
@@ -756,59 +727,50 @@ def _compare_row(u: str, cl: list[dict]) -> dict:
     }
 
 
+def extract_article(url: str, html: str | None) -> dict:
+    """The whole chain for one document: sanitize → extractors →
+    cleaner → comparer. Returns the `_ARTICLE_CORE` fields; empty or
+    NULL html votes over no candidates (every field None)."""
+    if not html:
+        return _compare_row(url, [])
+    h = sanitize_html(html)
+    return _compare_row(url, [_clean_candidate(ex(url, h)) for ex in _EXTRACTORS])
+
+
 @F.pandas_udf(_ARTICLE_CORE)
 def extract_article_core_udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-    rows = []
-    for u, h in zip(url, html):
-        if not h:
-            rows.append(_compare_row(u, []))
-            continue
-        h = sanitize_html(h)
-        cands = [_clean_candidate(ex(u, h)) for ex in _EXTRACTORS]
-        rows.append(_compare_row(u, cands))
-    return pd.DataFrame(rows)
+    return pd.DataFrame([extract_article(u, h) for u, h in zip(url, html)])
 
 
 # ---------------------------------------------------------------------------
 # pipeline assembly
 
+def empty_to_null(c: Column) -> Column:
+    """P1 projection rule: empty string → NULL (reference
+    pipelines.py:298-330)."""
+    return F.when(F.length(c) == 0, F.lit(None)).otherwise(c)
+
+
 def extract_articles(
     fetched: DataFrame,
     download_ts: Column | None = None,
-    fused: bool = True,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """fetched(url, html [, doc_id]) → article rows (P1 projection).
-
-    fused=True (default): one Arrow pass per batch. fused=False: the
-    modular candidates-array pipeline (native cleaner between UDFs) —
-    same results, kept for introspection and parity tests. `keep_cols`
-    names extra input columns to carry through to the article rows
-    (the streaming admission tier's host/admitted_seq ride here).
+    """fetched(url, html [, doc_id]) → article rows (P1 projection), one
+    Arrow pass per batch through `extract_article`. `keep_cols` names
+    extra input columns to carry through to the article rows (the
+    streaming admission tier's host/admitted_seq ride here).
     """
     keep = [
         c
         for c in ("doc_id", "fetched_at", *(keep_cols or []))
         if c in fetched.columns
     ]
-    if fused:
-        art = fetched.select(
-            *keep,
-            "url",
-            extract_article_core_udf(F.col("url"), F.col("html")).alias("a"),
-        )
-    else:
-        cands = fetched.select(
-            *keep,
-            "url",
-            extract_candidates_udf(F.col("url"), F.col("html")).alias("candidates"),
-        )
-        cands = cands.withColumn("candidates", clean_candidates(F.col("candidates")))
-        art = cands.select(
-            *keep,
-            "url",
-            compare_candidates_udf(F.col("url"), F.col("candidates")).alias("a"),
-        )
+    art = fetched.select(
+        *keep,
+        "url",
+        extract_article_core_udf(F.col("url"), F.col("html")).alias("a"),
+    )
     return art.select(
         *[c for c in keep if c != "fetched_at"],
         "url",

@@ -18,9 +18,9 @@ Per wave:
                 the politeness job for typical waves
   expansion   — join fetch-set × gated edges (fetch side broadcast
                 when small), min-disc_key dedup of in-wave duplicates
-  URL-seen    — optional partitioned bloom/cuckoo prefilter (bucket-
-                cogrouped probe) + exact left_anti confirm against the
-                `seen` table (D1)
+  URL-seen    — one exact left_anti against the `seen` table (D1); with
+                a bloom/cuckoo filter (bucket-cogrouped probe) only the
+                candidates the filter cannot rule out take that join
   checkpoint  — frontier/seen/order/metrics parquet snapshots per wave
                 (resume = read the last complete wave)
 
@@ -763,12 +763,9 @@ class FrontierEngine:
                     F.col("m.disc_key").alias("disc_key"),
                 )
             )
-            # URL-seen D1: optional bloom/cuckoo prefilter, exact
-            # anti-join confirm
+            # URL-seen D1: one exact left_anti against `seen`; with a
+            # filter, only the candidates it cannot rule out take it
             seen = seen_df()
-            if cfg.seen_filter:
-                _, _, prefilter = _seen_filter_fns(cfg.seen_filter)
-                cand = prefilter(cand, seen, cfg.seen_buckets, blobs=blob_state)
             # the seen side is a union of localCheckpointed chunks, and a
             # LogicalRDD leaf has NO usable size statistics — Catalyst
             # estimates it at schema-default width and would happily
@@ -785,12 +782,15 @@ class FrontierEngine:
             # builds only its own seen partition).
             if seen_url_bytes > BROADCAST_SEEN_URL_BYTES:
                 seen = seen.hint("shuffle_hash")
+            if cfg.seen_filter:
+                _, _, prefilter = _seen_filter_fns(cfg.seen_filter)
+                # definitely-new ∪ (maybe-seen ⋉̸ seen): already exact
+                new = prefilter(cand, seen, cfg.seen_buckets, blobs=blob_state)
+            else:
+                new = cand.join(seen, "url", "left_anti")
             _obs_new = Observation()
             new = _observe_urls(
-                cand.join(seen, "url", "left_anti").select(
-                    "url", "host", "depth", "disc_key"
-                ),
-                _obs_new,
+                new.select("url", "host", "depth", "disc_key"), _obs_new
             ).localCheckpoint(eager=True)
             n_new = int(_obs_new.get["n"])
             seen_url_bytes += int(_obs_new.get["b"])

@@ -107,21 +107,6 @@ CRAWL_ORDER = T.StructType(
 
 SEEN = T.StructType([T.StructField("url", T.StringType(), False)])
 
-# one extractor's proposal (reference
-# newsplease/pipeline/extractor/article_candidate.py:1-13)
-CANDIDATE = T.StructType(
-    [
-        T.StructField("extractor", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("topimage", T.StringType(), True),
-        T.StructField("author", T.ArrayType(T.StringType()), True),
-        T.StructField("publish_date", T.StringType(), True),
-        T.StructField("language", T.StringType(), True),
-    ]
-)
-
 # canonical extracted-article row (reference newsplease/NewsArticle.py:38-55,
 # pipeline/pipelines.py:299-330, init-postgresql-db.sql)
 ARTICLE = T.StructType(

@@ -8,7 +8,12 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from news_please_spark.extraction.extract import article_to_spans, extract_articles
+from news_please_spark import from_html
+from news_please_spark.extraction.extract import (
+    article_to_spans,
+    extract_article,
+    extract_articles,
+)
 from news_please_spark.extraction.heuristics import pass_heuristics
 from news_please_spark.synth import DocWorld
 
@@ -54,22 +59,10 @@ def test_markup_permutation_axis_is_exercised():
     assert re.search(r"property=.og:type", blob)
 
 
-def test_fused_equals_modular_pipeline(spark):
-    """The fused single-pass UDF and the modular candidates pipeline
-    (native cleaner between UDFs) must produce identical articles."""
-    world = DocWorld(60)
-    fetched = world.responses_df(spark)
-    a = {r.doc_id: r for r in extract_articles(fetched, fused=True).collect()}
-    b = {r.doc_id: r for r in extract_articles(fetched, fused=False).collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k] == b[k], (k, a[k], b[k])
-
-
-def test_fused_equals_modular_with_newlines(spark):
-    """Trim-semantics parity: HTML whose cleaned fields carry embedded /
-    framing newlines must produce identical articles on the fused
-    (Python str.strip) and modular (native ws_trim) paths."""
+def test_newline_framed_fields_are_trimmed(spark):
+    """HTML whose cleaned fields carry embedded / framing newlines:
+    framing whitespace is trimmed (newlines included), runs of blank
+    lines collapse to one newline, inner spaces collapse to one."""
     html = (
         '<html lang="en"><head>\n'
         '<meta property="og:title" content="\nSpaced   Title\n">\n'
@@ -87,10 +80,29 @@ def test_fused_equals_modular_with_newlines(spark):
         [("docX", "https://h1.news-example.org/a.html", html)],
         "doc_id string, url string, html string",
     )
-    a = extract_articles(fetched, fused=True).collect()[0]
-    b = extract_articles(fetched, fused=False).collect()[0]
-    assert a == b, (a, b)
+    a = extract_articles(fetched).collect()[0]
     assert a.title == "Spaced Title"
+    assert a.description == "line one\nline two"
+    assert list(a.authors) == ["A. Writer"]
+    assert a.date_publish == datetime(2021, 5, 6, 7, 8, 9)
+
+
+def test_missing_html_extracts_nothing(spark):
+    """Empty or NULL html votes over no candidates: every extracted
+    field is None, and the article row still carries url and
+    source_domain."""
+    url = "https://h1.news-example.org/2021/05/06/a.html"
+    for html in (None, ""):
+        assert set(extract_article(url, html).values()) == {None}, html
+    rows = from_html(
+        spark,
+        spark.createDataFrame([(url, None)], "url string, html string"),
+    ).collect()
+    assert len(rows) == 1
+    r = rows[0].asDict()
+    assert r.pop("url") == url
+    assert r.pop("source_domain") == "h1.news-example.org"
+    assert set(r.values()) == {None}, r
 
 
 def test_span_sequence_equality(spark):

@@ -198,15 +198,9 @@ class TestMalformedMarkup:
     doc; here each shape is pinned in isolation)."""
 
     def _article(self, html, url="https://h1.news-example.org/a.html"):
-        from news_please_spark.extraction.extract import (
-            _clean_candidate,
-            _compare_row,
-            _EXTRACTORS,
-            sanitize_html,
-        )
+        from news_please_spark.extraction.extract import extract_article
 
-        h = sanitize_html(html)
-        return _compare_row(url, [_clean_candidate(ex(url, h)) for ex in _EXTRACTORS])
+        return extract_article(url, html)
 
     BODY = (
         "<p>" + " ".join(["the alpha beta"] * 8) + "</p>"

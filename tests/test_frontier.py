@@ -138,6 +138,29 @@ def test_cuckoo_filter_is_exact(spark, salt_buckets):
     assert e_order == o_order
 
 
+def test_filtered_url_seen_runs_one_anti_join_per_wave(spark, monkeypatch):
+    """The filter's result (definitely-new ∪ maybe-seen ⋉̸ seen) is
+    already exact, so a filtered wave runs ONE left_anti against `seen`
+    — on the maybe-seen rows only — not a second one over the filter's
+    whole output."""
+    cls = type(spark.range(1))
+    join = cls.join
+    anti = []
+
+    def counting_join(self, other, on=None, how=None):
+        if how == "left_anti":
+            anti.append(how)
+        return join(self, other, on, how)
+
+    monkeypatch.setattr(cls, "join", counting_join)
+    o_order, o_seen, e_order, e_seen, res = run_both(
+        spark, 400, 8, 3, seen_filter="bloom"
+    )
+    assert e_seen == o_seen
+    assert e_order == o_order
+    assert len(anti) == res.waves
+
+
 @pytest.mark.parametrize("bad", ["", "none", "Bloom", "broadcast", True])
 def test_unknown_seen_filter_is_rejected_at_config(bad):
     with pytest.raises(ValueError, match="seen_filter"):
