@@ -11,11 +11,11 @@ ONE declarative pipeline over the engine's existing tiers:
   from_warc  (package facade)   — WARC framing, status/content gates,
                                   charset decode, E1-E5+V1-V7 extraction
   VersionedArticleStore.merge   — set-oriented MERGE with CAS commit
-  completed log                 — a SnapshotCatalog table of done paths,
-                                  committed AFTER the merge as its own
-                                  snapshot (two commits, not one
-                                  transaction: see the crash-idempotence
-                                  item in ROADMAP.md)
+  completed log                 — a delta table of done paths in the
+                                  state.py delta layer, committed AFTER
+                                  the merge as its own snapshot (two
+                                  commits, not one transaction: see the
+                                  crash-idempotence item in ROADMAP.md)
 
 Scale notes (the real CC-NEWS firehose):
   * the inventory is O(10^5) paths — a driver-side list is the correct
@@ -34,8 +34,6 @@ Scale notes (the real CC-NEWS firehose):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,77 +42,54 @@ from news_please_spark.state import SnapshotCatalog
 
 
 class CompletedWarcLog:
-    """The fully-extracted WARC log (D3) as an APPEND-ONLY snapshot
-    table: each run commits only its DELTA of newly-done paths, and
-    paths() unions the deltas of every committed snapshot. Reference
-    commoncrawl_crawler.py keeps this as a flat file appended under a
-    lock; snapshot commits give the same append semantics plus
+    """The fully-extracted WARC log (D3) as an append-only delta table
+    of the state.py delta layer: each run commits only its DELTA of
+    newly-done paths, and paths() reads every live delta in one scan.
+    Reference commoncrawl_crawler.py keeps this as a flat file appended
+    under a lock; snapshot commits give the same append semantics plus
     concurrent-writer safety — and O(delta) per commit instead of
     rewriting the whole history every run (at a full CC-NEWS inventory
-    the history is O(10^5) paths and growing; the rewrite was the one
-    O(history)-per-run step in the pipeline)."""
+    the history is O(10^5) paths and growing). Expiring the catalog's
+    snapshots folds their deltas, so no logged path is lost."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.catalog = SnapshotCatalog(path, prefix="log=")
 
     def paths(self) -> DataFrame | None:
-        snaps = self.catalog.snapshots()
-        dirs = [
-            os.path.join(self.catalog.snapshot_dir(s), "paths")
-            for s in snaps
-        ]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if not dirs:
-            return None
+        df = self.catalog.read_deltas(self.spark, "paths")
         # distinct: racing writers may both have logged a path; the
         # consumer semantics are set-membership
-        return self.spark.read.parquet(*dirs).distinct()
+        return None if df is None else df.distinct()
 
     def append(self, new_paths: DataFrame) -> int:
         """Commit `new_paths` as one delta; a path logged twice is one
         member, because paths() deduplicates on read."""
-        tx = self.catalog.begin()
-        n = tx.write_table("paths", new_paths.coalesce(1))
-        return tx.commit({"n_delta": n})
+        return self.catalog.append_delta("paths", new_paths.coalesce(1))
 
     def compact(self) -> int:
-        """Fold every delta into one snapshot and expire the rest —
-        run occasionally so a years-long log doesn't accrete thousands
-        of tiny delta files."""
-        tx = self.catalog.begin()
-        n = tx.write_table("paths", self.paths().coalesce(1))
-        snap = tx.commit({"n": n, "compacted": True})
-        self.catalog.expire_snapshots(keep_last=1)
-        return snap
+        """Fold every delta into one deduplicated snapshot and expire
+        the rest — run occasionally so a years-long log doesn't accrete
+        thousands of tiny delta files."""
+        return self.catalog.compact_deltas(self.spark, "paths", distinct=True)
 
 
 class CdxLog:
-    """The archive's CDX index as append-only snapshot deltas, the
-    same layout discipline as CompletedWarcLog: each pass commits only
-    its batch's index rows; rows() unions every committed delta.
-    cdx_index_incremental consults rows() so a payload that appeared
-    in ANY earlier pass is marked revisit in later deltas."""
+    """The archive's CDX index as an append-only delta table, like
+    CompletedWarcLog: each pass commits only its batch's index rows;
+    rows() reads every live delta. cdx_index_incremental consults
+    rows() so a payload that appeared in ANY earlier pass is marked
+    revisit in later deltas."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.catalog = SnapshotCatalog(path, prefix="cdx=")
 
     def rows(self) -> DataFrame | None:
-        snaps = self.catalog.snapshots()
-        dirs = [
-            os.path.join(self.catalog.snapshot_dir(s), "cdx")
-            for s in snaps
-        ]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
+        return self.catalog.read_deltas(self.spark, "cdx")
 
     def append(self, delta: DataFrame) -> int:
-        tx = self.catalog.begin()
-        n = tx.write_table("cdx", delta)
-        return tx.commit({"n_delta": n})
+        return self.catalog.append_delta("cdx", delta)
 
 
 def extract_commoncrawl(

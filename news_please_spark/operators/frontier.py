@@ -37,7 +37,7 @@ Scale notes (100 TB / 10^10 URLs):
 
 from __future__ import annotations
 
-import json
+import logging
 import os
 from dataclasses import dataclass, field
 
@@ -47,11 +47,14 @@ from pyspark.sql import functions as F
 from news_please_spark.functions.urls import url_bucket, url_host, url_path
 from news_please_spark.operators.cacheutil import release_df
 from news_please_spark.operators.ordering import mark_top_k_per_key, with_global_seq
+from news_please_spark.state import SnapshotCatalog, read_parquet_dirs
 from news_please_spark.world import (
     ALLOWED_DOMAIN_SUFFIX,
     IGNORE_EXTENSIONS,
     IGNORE_REGEX,
 )
+
+_log = logging.getLogger(__name__)
 
 BROADCAST_FETCH_LIMIT = 100_000  # rows; above this the driver-side broadcast
 # build (collect + hash-relation + serialize, ~3-5 s at 150k rows) becomes the
@@ -65,6 +68,7 @@ BROADCAST_SEEN_URL_BYTES = 32 << 20  # raw URL bytes; below this the URL-seen
 SMALL_SEQ_LIMIT = 500_000  # below this a single-partition window beats two-phase
 # (a one-task sort of 500k rows is ~0.3 s; the two-phase numbering costs
 # two extra jobs + a shuffle — only worth it for genuinely huge waves)
+CHECKPOINT_EVERY = 8  # waves between compactions of the per-wave order parts
 SMALL_SEQ_BYTES = 64 << 20  # ... but only while the whole fetch set also fits
 # one task's sort buffer comfortably — fat rows (multi-KB URLs) must take the
 # two-phase path even at low row counts
@@ -117,15 +121,10 @@ class FrontierConfig:
     salt_buckets: int = 1             # >1 enables skew-safe two-phase top-k
     state_dir: str | None = None      # enables checkpoint/resume
     # wave-history retention: keep only the newest N wave snapshots
-    # (None = keep all). Long crawls otherwise accrete one frontier
-    # copy per wave forever; expiry folds each expired wave's seen
-    # DELTA into the state dir's base area first (resume needs the
-    # full layered seen set), then expires the snapshot — see
-    # expire_waves.
+    # (None = keep all), so long crawls do not accrete one frontier copy
+    # per wave; expired seen deltas are kept (see expire_waves).
     retain_waves: int | None = None
     seen_buckets: int = 32            # hash-bucket layout of the seen table
-    checkpoint_every: int = 8         # waves between lineage truncations
-    verbose: bool = False
 
     def __post_init__(self) -> None:
         if self.seen_filter not in (None, "bloom", "cuckoo"):
@@ -329,57 +328,25 @@ class FrontierEngine:
     # so two crawlers resuming the same state dir cannot both commit a
     # wave — one gets CommitConflict (the Iceberg commit protocol the
     # 100-TB deployment would run on the catalog's metadata pointer).
+    # `seen` is a delta table (each wave commits only its new URLs).
     def _wave_catalog(self):
-        from news_please_spark.state import SnapshotCatalog
-
         return SnapshotCatalog(self.cfg.state_dir, prefix="wave=", width=5)
-
-    def _wave_dir(self, wave: int) -> str:
-        return self._wave_catalog().snapshot_dir(wave)
 
     def _save_wave(self, wave, frontier, seen, order_wave, meta) -> None:
         tx = self._wave_catalog().begin(expected=wave - 1)
         bucket = url_bucket("url", self.cfg.seen_buckets)
-        frontier.write.mode("overwrite").parquet(tx.path("frontier"))
-        seen.repartition(self.cfg.seen_buckets, bucket).write.mode(
-            "overwrite"
-        ).parquet(tx.path("seen"))
-        order_wave.write.mode("overwrite").parquet(tx.path("order"))
+        tx.write_table("frontier", frontier)
+        tx.write_delta("seen", seen, repartition=(self.cfg.seen_buckets, bucket))
+        tx.write_table("order", order_wave)
         tx.commit(meta)  # raises state.CommitConflict on a racing writer
         if self.cfg.retain_waves is not None:
             self.expire_waves(self.cfg.retain_waves)
 
     def expire_waves(self, keep_last: int) -> list[int]:
-        """Retention for the wave history: keep the newest `keep_last`
-        wave snapshots, folding each expired wave's seen DELTA into the
-        state dir's `base/` area first (a directory rename, no data
-        rewrite — the append-only seen layout survives expiry intact;
-        resume reads init ∪ base/* ∪ surviving wave deltas), then
-        expire the snapshot dirs via the catalog. A crash between the
-        fold and the expiry leaves a wave dir without its seen table —
-        resume's per-wave existence check is on the seen SUBDIR, so
-        nothing is double-counted or lost. Returns the expired ids."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, not {keep_last}")
-        cat = self._wave_catalog()
-        snaps = cat.snapshots()
-        expired = snaps[:-keep_last] if len(snaps) > keep_last else []
-        if not expired:
-            return []
-        base = os.path.join(self.cfg.state_dir, "base")
-        os.makedirs(base, exist_ok=True)
-        for w in expired:
-            src = os.path.join(cat.snapshot_dir(w), "seen")
-            dst = os.path.join(base, f"seen-w{w:05d}")
-            if os.path.isdir(src) and not os.path.isdir(dst):
-                os.rename(src, dst)
-        return cat.expire_snapshots(keep_last=keep_last)
-
-    @staticmethod
-    def latest_wave(state_dir: str) -> int | None:
-        from news_please_spark.state import SnapshotCatalog
-
-        return SnapshotCatalog(state_dir, prefix="wave=", width=5).latest()
+        """Retention: keep the newest `keep_last` wave snapshots. Expired
+        seen deltas move to `base/` (resume still reads every one); the
+        frontier and order tables go. Returns the expired ids."""
+        return self._wave_catalog().expire_snapshots(keep_last=keep_last)
 
     # -- main loop --------------------------------------------------------
     def run(
@@ -412,45 +379,21 @@ class FrontierEngine:
         spark, cfg = self.spark, self.cfg
         if resume and cfg.state_dir:
             # a crash mid _save_wave leaves a wave=NNNNN.tmp* staging
-            # dir; it must neither count as a wave (the catalog's
-            # listing skips it) nor contribute its partially-written
-            # seen delta — globbing wave=*/seen would silently mark the
-            # re-run wave's URLs as already seen. Sweep stale staging,
-            # then enumerate committed waves only.
-            self._wave_catalog().sweep_staging()
-            last = self.latest_wave(cfg.state_dir)
+            # dir, which neither counts as a wave nor adds its partial
+            # seen delta: the catalog lists committed waves only
+            cat = self._wave_catalog()
+            cat.sweep_staging()
+            last = cat.latest()
             if last is not None:
-                d = self._wave_dir(last)
-                with open(os.path.join(d, "meta.json")) as f:
-                    meta = json.load(f)
-                frontier = spark.read.parquet(os.path.join(d, "frontier"))
-                # seen = initial seeds ∪ deltas folded to base/ by wave
-                # expiry ∪ per-wave deltas of surviving COMPLETE waves
-                # (append-only layout: what Iceberg appends would be at
-                # scale). Existence is checked on the seen SUBDIR —
-                # a wave mid-expiry may have lost its delta to base/
-                # while the snapshot dir still exists.
-                base_dir = os.path.join(cfg.state_dir, "base")
-                base_paths = (
-                    sorted(
-                        os.path.join(base_dir, n)
-                        for n in os.listdir(base_dir)
-                        if n.startswith("seen-w")
-                    )
-                    if os.path.isdir(base_dir)
-                    else []
-                )
-                seen_paths = (
-                    [os.path.join(cfg.state_dir, "init", "seen")]
-                    + base_paths
-                    + [
-                        os.path.join(self._wave_dir(w), "seen")
-                        for w in range(last + 1)
-                        if os.path.isdir(os.path.join(self._wave_dir(w), "seen"))
-                    ]
-                )
+                meta = cat.read_meta(last)
+                frontier = cat.read_table(spark, "frontier", last)
+                # seen = initial seeds ∪ every wave's seen delta
+                seen_paths = [
+                    os.path.join(cfg.state_dir, "init", "seen"),
+                    *cat.delta_paths("seen"),
+                ]
                 obs = Observation()
-                seen = _observe_urls(spark.read.parquet(*seen_paths), obs)
+                seen = _observe_urls(read_parquet_dirs(spark, seen_paths), obs)
                 return (
                     frontier.localCheckpoint(eager=True),
                     seen.localCheckpoint(eager=True),
@@ -872,14 +815,13 @@ class FrontierEngine:
                     "expand_secs": round(_t_end - _t_seq, 3),
                 }
             )
-            if cfg.verbose:
-                print(f"[wave {wave}] {metrics[-1]}", flush=True)
+            _log.info("wave %d %s", wave, metrics[-1])
             seq_base = seq_next
             wave += 1
             # periodic compaction of the order-part list (one leaf per
             # wave); the seen chunks self-compact via the size-tiered
             # merge above
-            if wave % cfg.checkpoint_every == 0:
+            if wave % CHECKPOINT_EVERY == 0:
                 if order_parts:
                     old_parts = order_parts
                     merged = order_parts[0]

@@ -21,11 +21,11 @@ but POSIX rename semantics so it runs anywhere the checkpoints do:
   Committed snapshot dirs are never empty (commit always writes a
   meta.json), which is what makes the losing rename reliably fail.
 
-Used by BOTH stateful components: the versioned article store
-(sinks/versioned.py — current/archive tables per snapshot) and the
-crawl frontier's per-wave checkpoints (operators/frontier.py —
-frontier/seen/order per wave), so resume, lineage, and writer-conflict
-semantics are one audited code path, not two ad-hoc rename dances.
+The append-only DELTA layer sits on top: a delta table (named by a
+`delta-<table>` marker file) holds per snapshot only the rows that
+commit appended, and its value is the bag union of every delta, read
+in one scan. Its callers: the completed-WARC and CDX logs, the
+streaming sink and the crawl's `seen` deltas.
 
 At 100 TB the snapshots live in an Iceberg catalog and `commit()`
 becomes the metadata-pointer swap; the directory layout here mirrors
@@ -233,10 +233,8 @@ class SnapshotCatalog:
         name BEFORE its recursive delete, so a reader that raced the
         expiry either sees the full snapshot or none of it — never a
         half-deleted one — and a crash mid-delete leaves only a .tmp
-        dir that the next sweep_staging() removes. The catalog deletes
-        whole snapshots only; state layered ACROSS snapshots (like the
-        frontier's per-wave seen deltas) must be folded forward by the
-        owner first — see FrontierEngine.expire_waves."""
+        dir that the next sweep_staging() removes. Delta tables survive:
+        an expired snapshot's delta moves to `base/<table>-wNNNNN`."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = self.snapshots()
@@ -244,14 +242,33 @@ class SnapshotCatalog:
         if keep_refs:
             pinned = set(self.refs().values())
             expired = [s for s in expired if s not in pinned]
+        base = os.path.join(self.path, "base")
+        for table in self.delta_tables():
+            # drop the deltas below the newest compaction before any fold:
+            # a drop is an atomic rename, so no crash folds a compaction
+            # next to a delta it holds. A ref-pinned superseded delta
+            # stays, and so does the compaction's snapshot (its floor
+            # hides that delta).
+            floor, entries = self._deltas(table, snaps)
+            kept_below = False
+            for s, d in entries:
+                held = os.path.dirname(d) != base
+                if s < floor:
+                    if held and s not in expired:
+                        kept_below = True
+                    else:
+                        _drop_dir(d)
+                elif held and s in expired:
+                    if s == floor and kept_below:
+                        expired.remove(s)
+                        continue
+                    os.makedirs(base, exist_ok=True)
+                    try:
+                        os.rename(d, os.path.join(base, f"{table}-w{s:0{self.width}d}"))
+                    except FileNotFoundError:
+                        pass  # a concurrent expiry folded it first
         for s in expired:
-            d = self.snapshot_dir(s)
-            doomed = f"{d}.tmp-expire-{uuid.uuid4().hex[:8]}"
-            try:
-                os.rename(d, doomed)
-            except OSError:
-                continue  # concurrent expiry got it first
-            shutil.rmtree(doomed, ignore_errors=True)
+            _drop_dir(self.snapshot_dir(s))
         return expired
 
     def sweep_staging(self) -> int:
@@ -270,6 +287,62 @@ class SnapshotCatalog:
                     pass
         return n
 
+    # -- append-only delta tables -----------------------------------------
+    def delta_tables(self) -> list[str]:
+        """The tables written as deltas (`delta-<table>` markers)."""
+        return sorted(n[len("delta-"):] for n in os.listdir(self.path) if n.startswith("delta-"))
+
+    def _deltas(self, table: str, snaps: list[int]) -> tuple[int, list[tuple[int, str]]]:
+        """(floor, entries): every delta of `table` on disk, in base/ or
+        its snapshot, as (snapshot id, dir) ascending; floor is the id of
+        the newest compaction (-1 if none), which holds all deltas below."""
+        base, stem = os.path.join(self.path, "base"), f"{table}-w"
+        held = [(s, os.path.join(self.snapshot_dir(s), table)) for s in snaps]
+        held = [(s, d) for s, d in held if os.path.isdir(d)]
+        folded = [
+            (int(n[len(stem):]), os.path.join(base, n))
+            for n in (os.listdir(base) if os.path.isdir(base) else [])
+            if n.startswith(stem) and n[len(stem):].isdigit()
+        ]
+        floor = max((s for s, _ in held if self.read_meta(s).get("compacted")), default=-1)
+        return floor, sorted(folded + held)
+
+    def delta_paths(self, table: str) -> list[str]:
+        """Directories of every live delta of `table`, oldest first."""
+        floor, entries = self._deltas(table, self.snapshots())
+        return [d for s, d in entries if s >= floor]
+
+    def read_deltas(self, spark, table: str, allow_missing_columns: bool = False):
+        """Every live delta of `table` in one scan, None if there is none."""
+        dirs = self.delta_paths(table)
+        return read_parquet_dirs(spark, dirs, allow_missing_columns) if dirs else None
+
+    def append_delta(self, table: str, df, meta: dict | None = None) -> int:
+        """Commit `df` as one delta of `table` (CommitConflict on a lost
+        race); meta gains `n_delta`, the row count observed on the write."""
+        tx = self.begin()
+        n = tx.write_delta(table, df)
+        return tx.commit({**(meta or {}), "n_delta": n})
+
+    def compact_deltas(self, spark, table: str, distinct=False) -> int:
+        """Fold every live delta of `table` into one new snapshot (a bag,
+        or a set with `distinct`), then expire the older snapshots. Its
+        meta is the latest one's (so the sink's batch_id survives) with
+        `n` and `compacted` for `n_delta`; readers skip the deltas below
+        it, so a crash before the expiry counts no row twice."""
+
+        def plan(snap):
+            df = None if snap is None else self.read_deltas(spark, table)
+            if df is None:
+                raise FileNotFoundError(f"no delta of {table!r} in {self.path}")
+            meta = {k: v for k, v in self.read_meta(snap).items() if k != "n_delta"}
+            df = df.distinct() if distinct else df
+            return df.coalesce(1), {**meta, "compacted": True}
+
+        new = self._rewrite(table, plan, max_retries=5)
+        self.expire_snapshots(keep_last=1)
+        return new
+
     # -- writing -----------------------------------------------------------
     def begin(self, expected: int | None = None) -> "Transaction":
         """Open a transaction on top of snapshot `expected` (defaults to
@@ -279,6 +352,23 @@ class SnapshotCatalog:
             latest = self.latest()
             expected = -1 if latest is None else latest
         return Transaction(self, expected)
+
+    def _rewrite(self, name: str, plan, max_retries: int, repartition=None) -> int:
+        """The CAS loop of the single-table rewrites: `plan(snap)` builds
+        (df, meta) on the latest snapshot (None if none); df commits as
+        `name`, meta gains its observed row count `n`, and a lost race
+        re-plans on the winner's snapshot. Returns the new id."""
+        last_err: Exception | None = None
+        for _ in range(max_retries):
+            snap = self.latest()
+            df, meta = plan(snap)
+            tx = self.begin(expected=-1 if snap is None else snap)
+            try:
+                n = tx.write_table(name, df, repartition=repartition)
+                return tx.commit({**meta, "n": n})
+            except CommitConflict as e:
+                last_err = e
+        raise last_err  # type: ignore[misc]
 
     def merge_into(
         self,
@@ -326,9 +416,8 @@ class SnapshotCatalog:
             raise ValueError(
                 f"when_not_matched must be insert|ignore, got {when_not_matched!r}"
             )
-        last_err: Exception | None = None
-        for _ in range(max_retries):
-            snap = self.latest()
+
+        def plan(snap):
             try:
                 target = None if snap is None else self.read_table(spark, name, snap)
             except FileNotFoundError:
@@ -349,21 +438,11 @@ class SnapshotCatalog:
                 result = parts[0]
                 for p in parts[1:]:
                     result = result.unionByName(p)
-            tx = self.begin(expected=-1 if snap is None else snap)
-            try:
-                tx.write_table(name, result, repartition=repartition)
-                return tx.commit(
-                    meta={
-                        "op": "merge_into",
-                        "table": name,
-                        "on": on,
-                        "when_matched": when_matched,
-                        "when_not_matched": when_not_matched,
-                    }
-                )
-            except CommitConflict as e:
-                last_err = e  # re-read on the winner's snapshot and retry
-        raise last_err  # type: ignore[misc]
+            return result, {"op": "merge_into", "table": name, "on": on,
+                            "when_matched": when_matched,
+                            "when_not_matched": when_not_matched}
+
+        return self._rewrite(name, plan, max_retries, repartition)
 
     def write_audit_publish(
         self,
@@ -437,37 +516,22 @@ class SnapshotCatalog:
         materially exceeds table size.  Returns the new snapshot id."""
         if target_bytes <= 0:
             raise ValueError(f"target_bytes must be positive, got {target_bytes}")
-        last_err: Exception | None = None
-        for _ in range(max_retries):
-            snap = self.latest()
-            if snap is None:
-                raise FileNotFoundError(f"no committed snapshot in {self.path}")
+
+        def plan(snap):
+            df = self.read_table(spark, name, snap)  # raises if none
+            if name in self.delta_tables():
+                raise ValueError(f"{name!r} is a delta table: use compact_deltas")
             d = os.path.join(self.snapshot_dir(snap), name)
-            if not os.path.isdir(d):
-                raise FileNotFoundError(
-                    f"table {name!r} not in snapshot {snap} of {self.path}"
-                )
             size = sum(
                 os.path.getsize(os.path.join(root, f))
                 for root, _, files in os.walk(d)
                 for f in files
             )
-            n_files = max(1, -(-size // target_bytes))
-            df = spark.read.parquet(d).coalesce(int(n_files))
-            tx = self.begin(expected=snap)
-            try:
-                tx.write_table(name, df)
-                return tx.commit(
-                    meta={
-                        "op": "compact",
-                        "table": name,
-                        "source_snap": snap,
-                        "target_bytes": target_bytes,
-                    }
-                )
-            except CommitConflict as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+            return df.coalesce(max(1, -(-size // target_bytes))), {
+                "op": "compact", "table": name, "source_snap": snap,
+                "target_bytes": target_bytes}
+
+        return self._rewrite(name, plan, max_retries)
 
     def cluster_table(
         self,
@@ -492,32 +556,19 @@ class SnapshotCatalog:
         selective scan.  Returns the new snapshot id."""
         if n_files < 1:
             raise ValueError(f"n_files must be positive, got {n_files}")
-        last_err: Exception | None = None
-        for _ in range(max_retries):
-            snap = self.latest()
-            if snap is None:
-                raise FileNotFoundError(f"no committed snapshot in {self.path}")
-            df = self.read_table(spark, name, snap)
+
+        def plan(snap):  # read_table raises when there is no snapshot
             out = (
-                df.withColumn("_zk", zkey)
+                self.read_table(spark, name, snap)
+                .withColumn("_zk", zkey)
                 .repartitionByRange(int(n_files), "_zk")
                 .sortWithinPartitions("_zk")
                 .drop("_zk")
             )
-            tx = self.begin(expected=snap)
-            try:
-                tx.write_table(name, out)
-                return tx.commit(
-                    meta={
-                        "op": "cluster",
-                        "table": name,
-                        "source_snap": snap,
-                        "n_files": n_files,
-                    }
-                )
-            except CommitConflict as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+            return out, {"op": "cluster", "table": name, "source_snap": snap,
+                         "n_files": n_files}
+
+        return self._rewrite(name, plan, max_retries)
 
 
 class Transaction:
@@ -556,6 +607,13 @@ class Transaction:
         w.parquet(self.path(name))
         return obs.get["n"]
 
+    def write_delta(self, name: str, df, repartition=None) -> int:
+        """write_table for an append-only delta table: records `name` as
+        a delta table of the catalog (SnapshotCatalog.delta_tables), so
+        expiry folds it and compact_table refuses it."""
+        open(os.path.join(self.catalog.path, f"delta-{name}"), "a").close()
+        return self.write_table(name, df, repartition=repartition)
+
     def read_table(self, spark, name: str):
         """Read back a STAGED table, pre-commit — the audit step of
         write-audit-publish reads here.  Ordinary readers cannot: the
@@ -593,6 +651,38 @@ class Transaction:
         if not self._done:
             shutil.rmtree(self.staging_dir, ignore_errors=True)
             self._done = True
+
+
+def _drop_dir(d: str) -> None:
+    """Delete dir `d`: an atomic rename out of every listing first (a
+    concurrent drop that got there first is fine), then the delete."""
+    doomed = f"{d}.tmp-expire-{uuid.uuid4().hex[:8]}"
+    try:
+        os.rename(d, doomed)
+    except FileNotFoundError:
+        return
+    shutil.rmtree(doomed, ignore_errors=True)
+
+
+def read_parquet_dirs(spark, dirs: list[str], allow_missing_columns: bool = False):
+    """Parquet dirs as ONE scan. Strict by default, like unionByName:
+    every dir must have the same columns, else AnalysisException; the
+    schema comes from Spark's footer metadata, so no inference job runs.
+    `allow_missing_columns` reads add-column drift instead: the union
+    of all columns, NULL where a dir predates one."""
+    if allow_missing_columns:
+        return spark.read.option("mergeSchema", "true").parquet(*dirs)
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import StructType
+
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    schemas = [StructType.fromJson(json.loads(pq.ParquetDataset(d).schema.metadata[key]))
+               for d in dirs]
+    if any(set(s.fieldNames()) != set(schemas[0].fieldNames()) for s in schemas):
+        raise AnalysisException(message=f"columns differ across {dirs}; "
+                                "read with allow_missing_columns to backfill NULL")
+    return spark.read.schema(schemas[0]).parquet(*dirs)
 
 
 # ---------------------------------------------------------------------------

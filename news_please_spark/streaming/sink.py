@@ -16,12 +16,12 @@ once (the same idempotence contract Delta's `txn` table gives a
 streamId). CAS commit conflicts (a concurrent writer on the catalog)
 retry on top of the new head.
 
-Each snapshot stores the batch DELTA under the table name;
-`read_appended` unions the deltas of every committed snapshot — the
-CompletedWarcLog layout, chosen over copy-on-write append because a
-stream commits often and rewriting history per micro-batch is
-O(history) (compact with SnapshotCatalog.compact_table when deltas
-accumulate).
+Each snapshot stores the batch DELTA of a state.py delta table (not a
+copy-on-write append: a stream commits often, and rewriting history per
+micro-batch is O(history)). `read_appended` reads them in one scan;
+`SnapshotCatalog(catalog_path).compact_deltas(spark, table)` folds them
+when they accumulate, keeping every row and the batch_id watermark;
+expiring the catalog's snapshots folds them into base/.
 
 The guard assumes ONE stream-checkpoint lineage per catalog: deleting
 the stream checkpoint restarts batch numbering at 0, which the guard
@@ -56,13 +56,10 @@ def commit_batch(
     for _ in range(max_retries):
         if max_committed_batch(cat) >= batch_id:
             return False
-        tx = cat.begin()
         try:
-            tx.write_table(table, batch_df)
-            tx.commit({"batch_id": batch_id})
+            cat.append_delta(table, batch_df, {"batch_id": batch_id})
             return True
         except CommitConflict:
-            tx.abort()
             continue  # re-check the new head, then retry on top
     raise CommitConflict(
         f"batch {batch_id}: lost the CAS race {max_retries} times"
@@ -94,24 +91,17 @@ def read_appended(
     table: str,
     allow_schema_evolution: bool = False,
 ) -> DataFrame | None:
-    """Union of every committed snapshot's delta for `table` (None if
-    nothing committed yet).
+    """Every committed batch of `table` in one scan (None if nothing
+    committed yet).
 
     ``allow_schema_evolution=True`` supports ADD-COLUMN drift across
     snapshots (Iceberg's add-only schema evolution): deltas written
     before a column existed contribute NULL for it, and the result
-    carries the union of all columns. Renames/drops are not resolved —
-    a rename reads as drop+add (both columns present, each null where
-    the other was written), which is also Iceberg's behavior without
-    explicit column-mapping metadata."""
-    cat = SnapshotCatalog(catalog_path)
-    out = None
-    for s in cat.snapshots():
-        try:
-            d = cat.read_table(spark, table, s)
-        except FileNotFoundError:
-            continue
-        out = d if out is None else out.unionByName(
-            d, allowMissingColumns=allow_schema_evolution
-        )
-    return out
+    carries the union of all columns; without it, drift raises
+    AnalysisException. Renames/drops are not resolved — a rename reads
+    as drop+add (both columns present, each null where the other was
+    written), which is also Iceberg's behavior without explicit
+    column-mapping metadata."""
+    return SnapshotCatalog(catalog_path).read_deltas(
+        spark, table, allow_missing_columns=allow_schema_evolution
+    )

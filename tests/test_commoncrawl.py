@@ -233,3 +233,22 @@ def test_cdx_append_counts_on_its_write(spark, tmp_path):
     snap, n_append = _jobs(spark, "cdx-append", lambda: cdx.append(delta))
     assert n_append <= n_write, (n_append, n_write)
     assert cdx.catalog.read_meta(snap)["n_delta"] == delta.count() == N
+
+
+def test_log_expiry_keeps_every_logged_path(spark, tmp_path):
+    """Expiring the log's snapshots folds their deltas into base/
+    instead of dropping them, so the next pass does not re-extract the
+    WARCs the expired deltas logged; a compaction over folded deltas
+    stays exact."""
+    log = CompletedWarcLog(spark, str(tmp_path / "done"))
+    for batch in (["a", "b"], ["c"], ["d"]):
+        log.append(spark.createDataFrame([(p,) for p in batch], "path string"))
+    assert log.catalog.expire_snapshots(keep_last=1) == [0, 1]
+    assert log.catalog.snapshots() == [2]
+    assert sorted(r.path for r in log.paths().collect()) == ["a", "b", "c", "d"]
+
+    log.append(spark.createDataFrame([("a",), ("e",)], "path string"))
+    snap = log.compact()
+    assert log.catalog.snapshots() == [snap]
+    assert log.catalog.read_meta(snap) == {"n": 5, "compacted": True}
+    assert sorted(r.path for r in log.paths().collect()) == ["a", "b", "c", "d", "e"]

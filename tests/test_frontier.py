@@ -234,10 +234,14 @@ def _persistent_rdd_count(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_storage_released_across_consecutive_runs(spark):
+def test_storage_released_across_consecutive_runs(spark, monkeypatch):
     """Two consecutive crawls on one session must not accrete storage:
     engine.close() + result.release() return the persistent-RDD set to
-    its pre-run level (VERDICT r3 wrong #3 — cache lifecycle)."""
+    its pre-run level (VERDICT r3 wrong #3 — cache lifecycle). Order
+    parts compact every 2 waves, so the compaction releases run too."""
+    import news_please_spark.operators.frontier as frontier_mod
+
+    monkeypatch.setattr(frontier_mod, "CHECKPOINT_EVERY", 2)
     world = World(n_pages=400, n_seeds=8)
 
     def one_run() -> int:
@@ -245,7 +249,7 @@ def test_storage_released_across_consecutive_runs(spark):
             spark,
             world.webgraph_df(spark),
             robots=world.robots_df(spark),
-            cfg=FrontierConfig(budget_per_host=8, max_depth=3, checkpoint_every=2),
+            cfg=FrontierConfig(budget_per_host=8, max_depth=3),
         )
         res = engine.run(world.seed_urls())
         n = res.order.count()

@@ -482,3 +482,103 @@ def test_refs_point_pin_and_move(spark, tmp_path):
     assert cat.get_ref("prod") is None
     with pytest.raises(FileNotFoundError):
         cat.read_table(spark, "t", ref="prod")
+
+
+# ---------------------------------------------------------------------------
+# append-only delta tables
+
+
+def test_delta_table_folds_on_expiry_and_compacts_exactly(spark, tmp_path, monkeypatch):
+    """A delta table keeps every row through expiry (deltas fold into
+    base/), through a compaction whose expiry crashed, and through a
+    later expiry that folds the compaction itself."""
+    cat = SnapshotCatalog(str(tmp_path / "d"))
+
+    def append(*ks):
+        return cat.append_delta("t", spark.createDataFrame([(k,) for k in ks], "k long"))
+
+    def keys():
+        return sorted(r.k for r in cat.read_deltas(spark, "t").collect())
+
+    assert cat.read_deltas(spark, "t") is None
+    assert append(1, 2) == 0 and append(2) == 1 and append(3) == 2
+    assert cat.read_meta(1) == {"n_delta": 1}
+    assert cat.delta_tables() == ["t"]
+    # a fresh open of the catalog knows "t" is a delta table
+    assert SnapshotCatalog(cat.path).expire_snapshots(keep_last=1) == [0, 1]
+    assert sorted(os.listdir(os.path.join(cat.path, "base"))) == ["t-w000000", "t-w000001"]
+    assert keys() == [1, 2, 2, 3]  # a bag: the duplicate 2 is kept
+
+    real_expire = SnapshotCatalog.expire_snapshots
+    monkeypatch.setattr(SnapshotCatalog, "expire_snapshots", lambda self, **kw: [])
+    snap = cat.compact_deltas(spark, "t")  # "crash" before the expiry
+    assert snap == 3 and cat.read_meta(3) == {"n": 4, "compacted": True}
+    assert keys() == [1, 2, 2, 3]
+    monkeypatch.setattr(SnapshotCatalog, "expire_snapshots", real_expire)
+
+    append(4)
+    # folds the compaction into base/ and drops the deltas it superseded
+    assert cat.expire_snapshots(keep_last=1) == [2, 3]
+    assert sorted(os.listdir(os.path.join(cat.path, "base"))) == ["t-w000003"]
+    assert keys() == [1, 2, 2, 3, 4]
+    with pytest.raises(ValueError, match="compact_deltas"):
+        cat.compact_table(spark, "t")
+
+
+def test_pinned_delta_survives_a_compaction(spark, tmp_path):
+    """A ref pins a snapshot's delta through a compaction that
+    supersedes it: read_table(ref=...) still reads it, the delta read
+    counts it once, and the compaction's snapshot stays until the ref
+    goes."""
+    cat = SnapshotCatalog(str(tmp_path / "d"))
+
+    def append(*ks):
+        return cat.append_delta("t", spark.createDataFrame([(k,) for k in ks], "k long"))
+
+    def keys():
+        return sorted(r.k for r in cat.read_deltas(spark, "t").collect())
+
+    append(1), append(2), append(3)
+    cat.set_ref("p", 0)
+    assert cat.compact_deltas(spark, "t") == 3
+    assert cat.snapshots() == [0, 3]
+    assert [r.k for r in cat.read_table(spark, "t", ref="p").collect()] == [1]
+    assert keys() == [1, 2, 3]
+
+    append(4)
+    # the compaction's snapshot is the floor that hides the pinned delta
+    assert cat.expire_snapshots(keep_last=1) == []
+    assert cat.snapshots() == [0, 3, 4]
+    assert keys() == [1, 2, 3, 4]
+
+    cat.delete_ref("p")
+    assert cat.expire_snapshots(keep_last=1) == [0, 3]
+    assert sorted(os.listdir(os.path.join(cat.path, "base"))) == ["t-w000003"]
+    assert keys() == [1, 2, 3, 4]
+
+
+def test_failed_delta_drop_keeps_the_compaction_in_place(spark, tmp_path, monkeypatch):
+    """If a superseded delta cannot be dropped, the expiry raises before
+    it moves the compaction into base/, so no read counts a row twice."""
+    cat = SnapshotCatalog(str(tmp_path / "d"))
+    for k in (1, 2):
+        cat.append_delta("t", spark.createDataFrame([(k,)], "k long"))
+    cat.expire_snapshots(keep_last=1)  # delta 0 now lives in base/
+    monkeypatch.setattr(SnapshotCatalog, "expire_snapshots", lambda self, **kw: [])
+    cat.compact_deltas(spark, "t")
+    monkeypatch.undo()
+    cat.append_delta("t", spark.createDataFrame([(3,)], "k long"))
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if src.endswith("t-w000000"):
+            raise PermissionError(src)
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(PermissionError):
+        cat.expire_snapshots(keep_last=1)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(cat.path, "base", "t-w000002"))
+    assert sorted(r.k for r in cat.read_deltas(spark, "t").collect()) == [1, 2, 3]
