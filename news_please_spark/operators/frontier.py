@@ -21,24 +21,27 @@ Per wave:
   URL-seen    — one exact left_anti against the `seen` table (D1); with
                 a bloom/cuckoo filter (bucket-cogrouped probe) only the
                 candidates the filter cannot rule out take that join
-  checkpoint  — frontier/seen/order/metrics parquet snapshots per wave
-                (resume = read the last complete wave)
+  checkpoint  — with state_dir, two append-only deltas per wave in one
+                CAS commit: `seen` (the wave's new rows, plus the seeds
+                at wave 0) and `order` (its fetched rows). The frontier
+                is exactly the seen rows not yet fetched, so it is never
+                written: resume rebuilds it as seen ⋉̸ order
 
 Scale notes (100 TB / 10^10 URLs):
-  * `seen` and `frontier` would live in Iceberg, bucketed by
-    url_bucket(url, B) so the per-wave anti-join is co-partitioned;
-    local parquet snapshots keep the same layout (.repartition on the
-    bucket expression before write).
-  * lineage is cut every wave via the checkpoint write — no
-    ever-growing union chain on the driver.
-  * per-wave metrics (rows fetched, per-host max, skew ratio) are
-    computed with `observe()`-style aggregations, one tiny job.
+  * `seen` would live in Iceberg, bucketed by url_bucket(url, B) so the
+    per-wave anti-join is co-partitioned; the local seen deltas keep the
+    same layout (.repartition on the bucket expression before write).
+    State grows O(seen + fetched), not O(waves × frontier).
+  * lineage is cut every wave via localCheckpoint — no ever-growing
+    union chain on the driver.
+  * per-wave metrics (rows fetched, new URLs, seen chunks, seq path,
+    phase timings) come from Observations on jobs that already run and
+    go to this module's logger at INFO.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -47,7 +50,7 @@ from pyspark.sql import functions as F
 from news_please_spark.functions.urls import url_bucket, url_host, url_path
 from news_please_spark.operators.cacheutil import release_df
 from news_please_spark.operators.ordering import mark_top_k_per_key, with_global_seq
-from news_please_spark.state import SnapshotCatalog, read_parquet_dirs
+from news_please_spark.state import SnapshotCatalog
 from news_please_spark.world import (
     ALLOWED_DOMAIN_SUFFIX,
     IGNORE_EXTENSIONS,
@@ -68,10 +71,21 @@ BROADCAST_SEEN_URL_BYTES = 32 << 20  # raw URL bytes; below this the URL-seen
 SMALL_SEQ_LIMIT = 500_000  # below this a single-partition window beats two-phase
 # (a one-task sort of 500k rows is ~0.3 s; the two-phase numbering costs
 # two extra jobs + a shuffle — only worth it for genuinely huge waves)
-CHECKPOINT_EVERY = 8  # waves between compactions of the per-wave order parts
 SMALL_SEQ_BYTES = 64 << 20  # ... but only while the whole fetch set also fits
 # one task's sort buffer comfortably — fat rows (multi-KB URLs) must take the
 # two-phase path even at low row counts
+CHECKPOINT_EVERY = 8  # waves between compactions of the per-wave order parts
+# discovery-key encoding: children get (parent_seq + 1) * DISC_STRIDE +
+# link_index, seeds all get 0. Child keys start at DISC_STRIDE, so they
+# never tie with a seed, and are unique among children as long as every
+# page has < DISC_STRIDE outlinks (enforced per row by a raise_error
+# branch in the expansion select). Politeness sorts by (disc_key, url)
+# and seq by (depth, disc_key, url): seeds fall back to url order — the
+# oracle's url-rank keys give the same order — so neither ever
+# tie-breaks on anything the oracle does not use. 64-bit headroom:
+# parent seq < 2^41 (~2.2e12 fetched pages — unreachable before the
+# multiply overflows).
+DISC_STRIDE = 1 << 22
 
 
 def estimated_fetch_bytes(n_rows: int, url_bytes: int) -> int:
@@ -90,17 +104,6 @@ def use_single_partition_seq(n_rows: int, est_bytes: int) -> bool:
     two-phase numbering. Keyed on rows AND estimated bytes so fat rows
     can't ride the single-task path."""
     return n_rows <= SMALL_SEQ_LIMIT and est_bytes <= SMALL_SEQ_BYTES
-# discovery-key encoding: children get (parent_seq + 1) * DISC_STRIDE +
-# link_index, seeds all get 0. Child keys start at DISC_STRIDE, so they
-# never tie with a seed, and are unique among children as long as every
-# page has < DISC_STRIDE outlinks (enforced per row by a raise_error
-# branch in the expansion select). Politeness sorts by (disc_key, url)
-# and seq by (depth, disc_key, url): seeds fall back to url order — the
-# oracle's url-rank keys give the same order — so neither ever
-# tie-breaks on anything the oracle does not use. 64-bit headroom:
-# parent seq < 2^41 (~2.2e12 fetched pages — unreachable before the
-# multiply overflows).
-DISC_STRIDE = 1 << 22
 
 
 @dataclass
@@ -120,10 +123,6 @@ class FrontierConfig:
     # only its delta
     salt_buckets: int = 1             # >1 enables skew-safe two-phase top-k
     state_dir: str | None = None      # enables checkpoint/resume
-    # wave-history retention: keep only the newest N wave snapshots
-    # (None = keep all), so long crawls do not accrete one frontier copy
-    # per wave; expired seen deltas are kept (see expire_waves).
-    retain_waves: int | None = None
     seen_buckets: int = 32            # hash-bucket layout of the seen table
 
     def __post_init__(self) -> None:
@@ -131,8 +130,9 @@ class FrontierConfig:
             raise ValueError(
                 f"seen_filter must be None, 'bloom' or 'cuckoo', not {self.seen_filter!r}"
             )
-        if self.retain_waves is not None and self.retain_waves < 1:
-            raise ValueError(f"retain_waves must be None or >= 1, not {self.retain_waves}")
+        for name, low in (("budget_per_host", 1), ("max_depth", 0), ("seen_buckets", 1)):
+            if getattr(self, name) < low:
+                raise ValueError(f"{name} must be >= {low}, not {getattr(self, name)}")
 
 
 def _seen_filter_fns(seen_filter: str):
@@ -328,25 +328,17 @@ class FrontierEngine:
     # so two crawlers resuming the same state dir cannot both commit a
     # wave — one gets CommitConflict (the Iceberg commit protocol the
     # 100-TB deployment would run on the catalog's metadata pointer).
-    # `seen` is a delta table (each wave commits only its new URLs).
+    # Both tables are append-only deltas: `seen` holds each wave's new
+    # frontier rows (url, host, depth, disc_key), `order` its fetched rows.
     def _wave_catalog(self):
         return SnapshotCatalog(self.cfg.state_dir, prefix="wave=", width=5)
 
-    def _save_wave(self, wave, frontier, seen, order_wave, meta) -> None:
+    def _save_wave(self, wave, seen_delta, order_wave, meta) -> None:
         tx = self._wave_catalog().begin(expected=wave - 1)
         bucket = url_bucket("url", self.cfg.seen_buckets)
-        tx.write_table("frontier", frontier)
-        tx.write_delta("seen", seen, repartition=(self.cfg.seen_buckets, bucket))
-        tx.write_table("order", order_wave)
+        tx.write_delta("seen", seen_delta, repartition=(self.cfg.seen_buckets, bucket))
+        tx.write_delta("order", order_wave)
         tx.commit(meta)  # raises state.CommitConflict on a racing writer
-        if self.cfg.retain_waves is not None:
-            self.expire_waves(self.cfg.retain_waves)
-
-    def expire_waves(self, keep_last: int) -> list[int]:
-        """Retention: keep the newest `keep_last` wave snapshots. Expired
-        seen deltas move to `base/` (resume still reads every one); the
-        frontier and order tables go. Returns the expired ids."""
-        return self._wave_catalog().expire_snapshots(keep_last=keep_last)
 
     # -- main loop --------------------------------------------------------
     def run(
@@ -371,37 +363,33 @@ class FrontierEngine:
             spark.conf.set(_aqe_key, _aqe_prev)
 
     def _start(self, seed_urls, resume: bool):
-        """The crawl's starting state: (frontier checkpoint, seen chunk
-        0, the checkpoint backing that chunk when it is a projection
-        over the frontier's, the chunk's {"n", "b"} row/URL-byte
-        stats, start wave, seq base) — from the seeds, or on resume
-        from the last complete wave under state_dir."""
+        """The crawl's starting state: (frontier checkpoint, seen
+        checkpoint with the frontier columns, its {"n", "b"} row/URL-byte
+        stats, start wave, seq base) — from the seeds, or on resume from
+        the last complete wave under state_dir."""
         spark, cfg = self.spark, self.cfg
         if resume and cfg.state_dir:
             # a crash mid _save_wave leaves a wave=NNNNN.tmp* staging
             # dir, which neither counts as a wave nor adds its partial
-            # seen delta: the catalog lists committed waves only
+            # deltas: the catalog lists committed waves only
             cat = self._wave_catalog()
             cat.sweep_staging()
             last = cat.latest()
             if last is not None:
-                meta = cat.read_meta(last)
-                frontier = cat.read_table(spark, "frontier", last)
-                # seen = initial seeds ∪ every wave's seen delta
-                seen_paths = [
-                    os.path.join(cfg.state_dir, "init", "seen"),
-                    *cat.delta_paths("seen"),
-                ]
+                seen = cat.read_deltas(spark, "seen")
+                if seen is None or set(seen.columns) != {"url", "host", "depth", "disc_key"}:
+                    raise ValueError(
+                        f"{cfg.state_dir}: its seen deltas lack the frontier columns "
+                        "(url, host, depth, disc_key) this engine resumes from; the "
+                        "crawl was checkpointed by an older layout"
+                    )
                 obs = Observation()
-                seen = _observe_urls(read_parquet_dirs(spark, seen_paths), obs)
-                return (
-                    frontier.localCheckpoint(eager=True),
-                    seen.localCheckpoint(eager=True),
-                    None,
-                    obs.get,
-                    last + 1,
-                    meta["seq_next"],
-                )
+                seen = _observe_urls(seen, obs).localCheckpoint(eager=True)
+                # the frontier is every seen row not yet fetched, with the
+                # host/depth/disc_key it entered with
+                fetched = cat.read_deltas(spark, "order").select("url")
+                frontier = seen.join(fetched, "url", "left_anti").localCheckpoint(eager=True)
+                return frontier, seen, obs.get, last + 1, cat.read_meta(last)["seq_next"]
         if isinstance(seed_urls, DataFrame):
             seeds = seed_urls.select("url")
         else:
@@ -430,17 +418,11 @@ class FrontierEngine:
             ),
             obs,
         ).localCheckpoint(eager=True)
-        # seen chunk 0 and init/seen read the frontier checkpoint — the
-        # seed plan runs once
-        seen = frontier.select("url")
-        if cfg.state_dir:
-            seen.write.mode("overwrite").parquet(
-                os.path.join(cfg.state_dir, "init", "seen")
-            )
-        return frontier, seen, frontier, obs.get, 0, 0
+        # the seed frontier is also the seen set — the seed plan runs once
+        return frontier, frontier, obs.get, 0, 0
 
     def _run_waves(
-        self, frontier, seen0, seen0_backing, seen0_stats, start_wave, seq_base
+        self, frontier, seen0, seen0_stats, start_wave, seq_base
     ) -> "CrawlResult":
         import time as _time
 
@@ -457,7 +439,7 @@ class FrontierEngine:
         # bounds the count at O(log seen) and the total merge work at
         # O(seen·log seen) amortized, measured 3-8× faster late waves
         # than the old fixed every-N-waves full fold.
-        seen_chunks: list[DataFrame] = [seen0]
+        seen_chunks: list[DataFrame] = [seen0.select("url")]
         chunk_sizes: list[int] = [int(seen0_stats["n"])]
         seen_url_bytes: int = int(seen0_stats["b"])
 
@@ -468,7 +450,7 @@ class FrontierEngine:
         if cfg.seen_filter:
             build_blobs, _, _ = _seen_filter_fns(cfg.seen_filter)
             blob_state = build_blobs(
-                seen0, cfg.seen_buckets, capacity=cfg.bloom_capacity
+                seen_chunks[0], cfg.seen_buckets, capacity=cfg.bloom_capacity
             ).localCheckpoint(eager=True)
 
         def seen_df() -> DataFrame:
@@ -486,18 +468,18 @@ class FrontierEngine:
         # O(frontier + seen), not O(waves · frontier).
         # the incoming frontier checkpoint's only other consumer is wave
         # 0's politeness checkpoint — chain it into the same release
-        # slot, unless it backs seen chunk 0
-        prev_ann: DataFrame | None = frontier if seen0_backing is None else None
+        # slot, unless it backs seen chunk 0 (the seed frontier does)
+        prev_ann: DataFrame | None = None if seen0 is frontier else frontier
         order_leaves: list[DataFrame] = []
         # chunk_backing[i]: the checkpoint whose blocks back
         # seen_chunks[i] when the chunk is a projection over it (a wave's
-        # `new`, or the seed frontier for chunk 0; None for chunks that
-        # own their root: a resumed chunk 0 and fold products). A
+        # `new`; for chunk 0 the seed frontier or the resumed seen
+        # checkpoint; None for fold products, which own their root). A
         # folded-away projection chunk can't free its backing checkpoint
         # immediately — the next frontier may still share it — so it
         # retires one wave later, once the next politeness checkpoint
         # has consumed that frontier.
-        chunk_backing: list[DataFrame | None] = [seen0_backing]
+        chunk_backing: list[DataFrame | None] = [seen0]
         retire_next: list[DataFrame] = []
         # a fused ann checkpoint (politeness mark + seq in ONE job)
         # backs its wave's order part, so it retires at order compaction
@@ -792,10 +774,11 @@ class FrontierEngine:
             frontier = deferred.unionByName(new)
 
             if cfg.state_dir:
+                # only a fresh crawl runs wave 0, and its seen delta
+                # also carries the seeds (seen0 is the seed frontier)
                 self._save_wave(
                     wave,
-                    frontier,
-                    new.select("url"),
+                    new if wave else seen0.unionByName(new),
                     order_wave,
                     {"seq_next": seq_next, "wave": wave},
                 )

@@ -161,10 +161,21 @@ def test_filtered_url_seen_runs_one_anti_join_per_wave(spark, monkeypatch):
     assert len(anti) == res.waves
 
 
-@pytest.mark.parametrize("bad", ["", "none", "Bloom", "broadcast", True])
+@pytest.mark.parametrize(
+    "bad",
+    [pytest.param({"seen_filter": v}, id=str(v)) for v in ["", "none", "Bloom", "broadcast", True]]
+    + [
+        pytest.param({k: v}, id=f"{k}={v}")
+        for k, v in [("budget_per_host", 0), ("budget_per_host", -1), ("max_depth", -1),
+                     ("seen_buckets", 0)]
+    ],
+)
 def test_unknown_seen_filter_is_rejected_at_config(bad):
-    with pytest.raises(ValueError, match="seen_filter"):
-        FrontierConfig(seen_filter=bad)
+    """An unknown seen_filter, and a budget below 1, a negative depth or
+    no seen bucket, raise at construction, naming the field."""
+    (name,) = bad
+    with pytest.raises(ValueError, match=name):
+        FrontierConfig(**bad)
 
 
 @pytest.mark.parametrize(

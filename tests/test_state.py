@@ -140,9 +140,11 @@ def test_frontier_save_wave_conflict(spark, tmp_path):
     )
     res = eng.run(world.seed_urls())
     assert res.waves >= 2
-    df = spark.range(3).selectExpr("cast(id as string) url")
+    df = spark.range(3).selectExpr(
+        "cast(id as string) url", "'h' host", "0 depth", "0L disc_key"
+    )
     with pytest.raises(CommitConflict):
-        eng._save_wave(0, df, df, df.selectExpr("url", "1 seq"), {"wave": 0})
+        eng._save_wave(0, df, df.selectExpr("url", "1 seq"), {"wave": 0})
     res.release()
     eng.close()
 
@@ -175,8 +177,11 @@ def test_expire_snapshots_retention(tmp_path):
     # idempotent; never deletes below keep_last; no staging residue
     assert cat.expire_snapshots(keep_last=2) == []
     assert not any(".tmp" in n for n in os.listdir(cat.path))
-    with pytest.raises(ValueError):
-        cat.expire_snapshots(keep_last=0)
+    before = sorted(os.listdir(cat.path))
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            cat.expire_snapshots(keep_last=keep_last)
+        assert sorted(os.listdir(cat.path)) == before
 
 
 # ---------------------------------------------------------------------------
