@@ -10,7 +10,9 @@ ONE declarative pipeline over the engine's existing tiers:
   warc_index (sources/flat.py)  — path→date filter + completed anti-join
   from_warc  (package facade)   — WARC framing, status/content gates,
                                   charset decode, E1-E5+V1-V7 extraction
-  VersionedArticleStore.merge   — set-oriented MERGE with CAS commit
+  VersionedArticleStore.merge   — set-oriented MERGE with CAS commit:
+                                  a snapshot of `current` plus the
+                                  archive's append-only delta
   completed log                 — a delta table of done paths in the
                                   state.py delta layer, committed AFTER
                                   the merge as its own snapshot (two

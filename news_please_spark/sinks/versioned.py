@@ -12,19 +12,26 @@ Semantics per incoming batch, keyed on canonical url:
     tie-break deterministic) wins; earlier ones are archived immediately
     with the right version chain.
 
-Storage: snapshots in a SnapshotCatalog (state.py) — each committed
-snapshot dir holds BOTH tables (current/ + archive/), published by one
-atomic rename with compare-and-swap on the snapshot id, so two writers
-merging concurrently cannot both win: the loser's merge() raises
-state.CommitConflict and retries on top of the winner's snapshot. This
-is the same current/archive two-table layout an Iceberg catalog would
-hold (then `merge()` becomes a single MERGE INTO + INSERT). Partition
-layout: hash-bucketed by url so the merge join co-partitions at scale.
+Storage: snapshots in a SnapshotCatalog (state.py). A committed
+snapshot holds `current` and that merge's `archive` delta: only the
+rows the merge archived, in the state.py delta layer, so the archive is
+the bag union of every delta and a merge writes O(batch) archive rows.
+Both are published by one atomic rename with compare-and-swap on the
+snapshot id, so two writers merging concurrently cannot both win: the
+loser's merge() raises state.CommitConflict, and its caller re-runs the
+merge on top of the winner's snapshot. This is the current/archive
+two-table layout an Iceberg catalog would hold (then `merge()` becomes
+a single MERGE INTO + INSERT). Partition layout: hash-bucketed by url
+so the merge join co-partitions at scale.
+
+A store written before the archive became a delta keeps the whole
+archive in its latest snapshot's `archive` table, and its meta has no
+`archived` count. archive() reads that table, and the first merge onto
+such a store writes it with the batch's archived rows as one
+`compacted` delta, whose floor hides the older full copies.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,31 +52,43 @@ class VersionedArticleStore:
         latest = self.catalog.latest()
         return -1 if latest is None else latest
 
-    def _table(self, name: str, snap: int) -> str:
-        return os.path.join(self.catalog.snapshot_dir(snap), name)
-
     def current(self, snap: int | None = None) -> DataFrame | None:
+        """The `current` table as of snapshot `snap` (default: latest);
+        None before the first merge."""
         snap = self.snapshot_id() if snap is None else snap
         if snap < 0:
             return None
-        return self.spark.read.parquet(self._table("current", snap))
+        return self.catalog.read_table(self.spark, "current", snap)
 
-    def archive(self, snap: int | None = None) -> DataFrame | None:
-        snap = self.snapshot_id() if snap is None else snap
-        if snap < 0:
+    def archive(self) -> DataFrame | None:
+        """Every archived row version: the union of the archive deltas,
+        one scan; None before the first merge."""
+        full = self._full_archive(self.snapshot_id())
+        return self.catalog.read_deltas(self.spark, "archive") if full is None else full
+
+    def _full_archive(self, snap: int) -> DataFrame | None:
+        """The older layout's whole archive when snapshot `snap` was
+        written in it (its meta has no `archived`), else None. The
+        `delta-archive` marker cannot tell the layouts apart: staging
+        the first delta creates it before the commit."""
+        if snap < 0 or "archived" in self.catalog.read_meta(snap):
             return None
-        return self.spark.read.parquet(self._table("archive", snap))
+        return self.catalog.read_table(self.spark, "archive", snap)
 
-    def _commit(self, current: DataFrame, archive: DataFrame, snap: int) -> None:
-        """Stage both tables, then CAS-commit snapshot `snap` (raises
-        state.CommitConflict if another writer committed it first).
-        meta.json records `current_rows`, the row count of `current`
-        observed on its write."""
+    def _commit(
+        self, current: DataFrame, archived: DataFrame, snap: int, compacted: bool = False
+    ) -> None:
+        """Stage `current` and the `archived` rows as the archive delta,
+        then CAS-commit snapshot `snap` (raises state.CommitConflict if
+        another writer committed it first). meta.json records
+        `current_rows` and `archived`, the row counts observed on the
+        two writes; `compacted` marks a delta that holds every older one."""
         tx = self.catalog.begin(expected=snap - 1)
         by_bucket = (self.buckets, url_bucket("url", self.buckets))
         n_current = tx.write_table("current", current, repartition=by_bucket)
-        tx.write_table("archive", archive, repartition=by_bucket)
-        tx.commit({"snapshot": snap, "current_rows": n_current})
+        n_archived = tx.write_delta("archive", archived, repartition=by_bucket)
+        meta = {"snapshot": snap, "current_rows": n_current, "archived": n_archived}
+        tx.commit({**meta, "compacted": True} if compacted else meta)
 
     # -- the merge -----------------------------------------------------------
     def merge(self, batch: DataFrame, order_col: str = "date_download") -> int:
@@ -79,7 +98,7 @@ class VersionedArticleStore:
         several versions of one url arriving together.
         """
         snap = self.snapshot_id()
-        cur = self.current()
+        cur = self.current(snap)
 
         # in-batch version ordering — the tie-break must be a STABLE
         # content hash, never monotonically_increasing_id(): mono-id
@@ -154,22 +173,12 @@ class VersionedArticleStore:
             current_out = untouched.unionByName(new_current)
             archive_add = displaced.unionByName(to_archive_from_batch)
 
-        old_archive = self.archive()
-        archive_out = (
-            archive_add
-            if old_archive is None
-            else old_archive.unionByName(archive_add)
-        )
+        full = self._full_archive(snap)
+        if full is not None:
+            archive_add = full.unionByName(archive_add)
         new_snap = snap + 1
         try:
-            self._commit(current_out, archive_out, new_snap)
+            self._commit(current_out, archive_add, new_snap, compacted=full is not None)
         finally:
             b.unpersist()
         return new_snap
-
-
-# ---------------------------------------------------------------------------
-# K9 savepath templating — the full reference token catalog lives in
-# sinks/savepath.py; re-exported here for back-compat.
-
-from news_please_spark.sinks.savepath import savepath  # noqa: E402,F401

@@ -25,7 +25,8 @@ The append-only DELTA layer sits on top: a delta table (named by a
 `delta-<table>` marker file) holds per snapshot only the rows that
 commit appended, and its value is the bag union of every delta, read
 in one scan. Its callers: the completed-WARC and CDX logs, the
-streaming sink and the crawl's `seen` deltas.
+streaming sink, the crawl's `seen` and `order` deltas and the
+versioned store's `archive`.
 
 At 100 TB the snapshots live in an Iceberg catalog and `commit()`
 becomes the metadata-pointer swap; the directory layout here mirrors
@@ -59,8 +60,8 @@ class AuditFailed(Exception):
 class SnapshotCatalog:
     """One table directory of immutable snapshots with CAS commits.
 
-    `prefix` names the snapshot dirs (`snap=` by default; the frontier
-    uses `wave=` to keep its on-disk layout and resume format stable).
+    `prefix` names the snapshot dirs (`snap=` by default; the crawl's
+    state dir uses `wave=`, one snapshot per wave).
     """
 
     def __init__(self, path: str, prefix: str = "snap=", width: int = 6):
@@ -105,7 +106,8 @@ class SnapshotCatalog:
         `snap` (default: latest), or as of the named `ref` (a tag set
         with set_ref — Iceberg's `VERSION AS OF 'tag'`). Snapshots are
         immutable, so the returned DataFrame is a stable view of that
-        version."""
+        version. The schema comes from the parquet footers
+        (read_parquet_dirs), so the read submits no Spark job."""
         if ref is not None:
             if snap is not None:
                 raise ValueError("pass snap or ref, not both")
@@ -121,7 +123,7 @@ class SnapshotCatalog:
             raise FileNotFoundError(
                 f"table {name!r} not in snapshot {snap} of {self.path}"
             )
-        return spark.read.parquet(d)
+        return read_parquet_dirs(spark, [d])
 
     def diff_table(
         self,
@@ -623,7 +625,7 @@ class Transaction:
         d = self.path(name)
         if not os.path.isdir(d):
             raise FileNotFoundError(f"table {name!r} not staged in {self.staging_dir}")
-        return spark.read.parquet(d)
+        return read_parquet_dirs(spark, [d])
 
     def commit(self, meta: dict | None = None) -> int:
         """Atomically publish the staged snapshot. Returns its id.

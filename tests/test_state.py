@@ -113,14 +113,17 @@ def test_versioned_store_two_writers_one_loser(spark, tmp_path):
     )
     assert st.merge(batch) == 0
 
-    cur, arc = st.current(), st.archive()
+    # _commit takes the archive DELTA: here, no row archived
+    cur = st.current()
+    arc = cur.limit(0)
     st2 = VersionedArticleStore(spark, path, buckets=2)
     st._commit(cur, arc, snap=1)
     with pytest.raises(CommitConflict):
         st2._commit(cur, arc, snap=1)
     assert st.snapshot_id() == 1
     # loser can retry on the new base
-    st2._commit(st2.current(), st2.archive(), snap=2)
+    st2._commit(st2.current(), arc, snap=2)
+    assert st2.archive().count() == 0
     assert st2.snapshot_id() == 2
 
 

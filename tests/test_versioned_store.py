@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from news_please_spark.sinks.versioned import VersionedArticleStore, savepath
+from news_please_spark.sinks.savepath import savepath
+from news_please_spark.sinks.versioned import VersionedArticleStore
+from news_please_spark.state import SnapshotCatalog, Transaction
 
 
 def _batch(spark, rows):
@@ -173,23 +176,114 @@ def test_savepath_trailing_slash_directory_quirk(spark):
     )
 
 
+# a first load, a re-crawl plus a new url, two versions of one url in
+# one batch (test_merge_versioning_chain's batches), a re-crawl of y
+BATCHES = [
+    [("https://a.com/x", "t1", "2026-01-01 00:00:00"),
+     ("https://a.com/y", "u1", "2026-01-01 00:00:00")],
+    [("https://a.com/x", "t2", "2026-01-02 00:00:00"),
+     ("https://a.com/z", "w1", "2026-01-02 00:00:00")],
+    [("https://a.com/x", "t3", "2026-01-03 00:00:00"),
+     ("https://a.com/x", "t4", "2026-01-04 00:00:00")],
+    [("https://a.com/y", "u2", "2026-01-05 00:00:00")],
+]
+
+
 def test_meta_records_current_rows(spark, tmp_path):
-    """Every merge's snapshot meta carries `current_rows`, the row
-    count of its `current` table observed on the write: a first load,
-    a re-crawl plus a new url, two versions of one url in one batch,
-    and an empty batch."""
+    """Every merge's snapshot meta carries `current_rows` and
+    `archived`, the row counts of its `current` table and its archive
+    delta observed on the writes: the first three BATCHES and an empty
+    batch. Each snapshot's `archive` holds only the rows that merge
+    archived, so the deltas add up to the archive, whose version chains
+    are test_merge_versioning_chain's."""
     store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
-    batches = [
-        [("https://a.com/x", "t1", "2026-01-01 00:00:00"),
-         ("https://a.com/y", "u1", "2026-01-01 00:00:00")],
-        [("https://a.com/x", "t2", "2026-01-02 00:00:00"),
-         ("https://a.com/z", "w1", "2026-01-02 00:00:00")],
-        [("https://a.com/x", "t3", "2026-01-03 00:00:00"),
-         ("https://a.com/x", "t4", "2026-01-04 00:00:00")],
-        [],
-    ]
-    for rows in batches:
+    archived = []
+    for rows in BATCHES[:3] + [[]]:
         snap = store.merge(_batch(spark, rows))
         meta = store.catalog.read_meta(snap)
         assert meta["current_rows"] == store.current(snap).count(), snap
-    assert meta == {"snapshot": 3, "current_rows": 3}
+        delta = store.catalog.read_table(spark, "archive", snap)
+        assert meta["archived"] == delta.count(), snap
+        archived.append(meta["archived"])
+    assert meta == {"snapshot": 3, "current_rows": 3, "archived": 0}
+    assert archived == [0, 1, 2, 0]
+    chains = sorted(
+        (r.url, r.version, r.title, r.ancestor, r.descendant)
+        for r in store.archive().collect()
+    )
+    assert chains == [
+        ("https://a.com/x", 1, "t1", None, 2),
+        ("https://a.com/x", 2, "t2", 1, 3),
+        ("https://a.com/x", 3, "t3", 2, 4),
+    ]
+    assert len(chains) == sum(archived)
+
+
+def _rows(df):
+    """A table's rows, columns by name, in a fixed order."""
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
+
+
+@pytest.mark.parametrize("crash", [False, True], ids=["merge", "crash-in-archive-write"])
+def test_merge_onto_a_store_of_the_older_layout(spark, tmp_path, monkeypatch, crash):
+    """A store written before the archive became a delta holds the FULL
+    archive in every snapshot, meta {snapshot, current_rows} and no
+    `delta-archive` marker. archive() reads it, and a merge on top ends
+    in the tables of a fresh store fed the same batches, no archive row
+    twice. With `crash`, the first merge raises while staging its
+    archive delta (after the marker exists): the store still reads its
+    old archive once, and the re-run ends in the same tables."""
+    fresh = VersionedArticleStore(spark, str(tmp_path / "fresh"), buckets=4)
+    old_cat = SnapshotCatalog(str(tmp_path / "old"))
+    for snap, rows in enumerate(BATCHES[:3]):
+        fresh.merge(_batch(spark, rows))
+        tx = old_cat.begin()
+        n = tx.write_table("current", fresh.current(snap))
+        tx.write_table("archive", fresh.archive())
+        tx.commit({"snapshot": snap, "current_rows": n})
+    old = VersionedArticleStore(spark, old_cat.path, buckets=4)
+    legacy = _rows(old.archive())
+    assert legacy == _rows(fresh.archive()) and len(legacy) == 3
+
+    if crash:
+        write_table = Transaction.write_table
+
+        def crashing(tx, name, df, **kw):
+            if name == "archive":
+                raise OSError("crash while staging the archive delta")
+            return write_table(tx, name, df, **kw)
+
+        monkeypatch.setattr(Transaction, "write_table", crashing)
+        with pytest.raises(OSError):
+            old.merge(_batch(spark, BATCHES[3]))
+        monkeypatch.undo()
+        assert old_cat.delta_tables() == ["archive"]
+        assert old_cat.snapshots() == [0, 1, 2]
+        assert _rows(old.archive()) == legacy
+
+    fresh.merge(_batch(spark, BATCHES[3]))
+    assert old.merge(_batch(spark, BATCHES[3])) == 3
+    assert _rows(old.current()) == _rows(fresh.current())
+    archive = _rows(old.archive())
+    assert archive == _rows(fresh.archive())
+    assert len(set(archive)) == len(archive) == 4
+    assert old_cat.read_meta(3) == {
+        "snapshot": 3, "current_rows": 3, "archived": 4, "compacted": True}
+
+
+def test_store_reads_submit_no_spark_job(spark, tmp_path):
+    """current(), archive() and SnapshotCatalog.read_table take their
+    schema from the parquet footers: opening a table runs no job."""
+    store = VersionedArticleStore(spark, str(tmp_path / "store"), buckets=4)
+    for rows in BATCHES[:2]:
+        store.merge(_batch(spark, rows))
+    sc = spark.sparkContext
+    group = "store-read-jobs"
+    sc.setJobGroup(group, "store read job count")
+    try:
+        cur, arc = store.current(), store.archive()
+        delta = store.catalog.read_table(spark, "archive", 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert (cur.count(), arc.count(), delta.count()) == (3, 1, 1)
